@@ -3,19 +3,22 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.ControlThrowable
 
 import graft.conf.DedupConfig
 import graft.io.{ParquetCatalog, StageMeta}
 
 /** The spark-submit pipeline entry point with checkpoint-every-stage and
   * exact resume (SURVEY.md §3.2, north rule "resumable from checkpoint with
-  * per-partition lineage + metrics").
+  * per-partition lineage + metrics"): [[DedupPipeline.compose]] under the
+  * staged executor.
   *
   * Every stage is written to the work-dir catalog and read BACK before the
   * next stage — this (a) truncates lineage so no stage ever re-executes an
   * upstream kernel, (b) guarantees the huge `content` column is never
   * scanned after `signatures`/`tokens` are materialized, and (c) makes each
-  * stage independently resumable.
+  * stage independently resumable. The suffix pass runs inline inside the
+  * candidate_pairs build, so a resumed run never computes it.
   *
   * Resume rule: a stage is skipped iff its `_SUCCESS` marker exists AND the
   * fingerprint recorded in stage_meta equals the fingerprint recomputed
@@ -41,6 +44,12 @@ object Dedup {
     Hashing.xxString(parts.mkString("|"), Hashing.DefaultSeed).toHexString
   }
 
+  /** Unwinds the composition once the `stopAfter` stage is materialized. */
+  private final class Stopped(val at: DataFrame) extends ControlThrowable
+
+  /** @param stopAfter stage name to return after (its table becomes the
+    *        result's `clusters`); empty runs the whole chain
+    */
   def run(
       spark: SparkSession,
       corpus: DataFrame,
@@ -54,89 +63,47 @@ object Dedup {
     val computed = scala.collection.mutable.ArrayBuffer.empty[String]
     var chainFp = Hashing.xxString(cfg.fingerprint + "|" + inputId, Hashing.DefaultSeed).toHexString
 
-    /** Compute-or-reuse one stage; returns the stage read back from disk.
-      * Row counts ride an `observe` on the write job itself (no extra pass
-      * over the written stage — re-reading a checkpoint to count it would
-      * double every stage's I/O at corpus scale).
+    /** Write one table with its lineage row (`wallMs` is read once the
+      * write has finished). Row counts ride an `observe` on the write job
+      * itself (no extra pass over the written stage — re-reading a
+      * checkpoint to count it would double every stage's I/O at corpus
+      * scale).
       */
-    def stage(name: String)(build: => DataFrame): DataFrame = {
-      chainFp = Hashing.xxString(chainFp + "|" + name, Hashing.DefaultSeed).toHexString
-      val reusable = cat.exists(spark, name) &&
-        StageMeta.lastFingerprint(spark, cat, name).contains(chainFp)
-      if (!reusable) {
-        val t0 = System.nanoTime()
-        val obs = org.apache.spark.sql.Observation(s"stage_${name}_$t0")
-        cat.write(build.observe(obs, count(lit(1)).as("rows")), name)
-        val rows = obs.get.get("rows").collect { case l: Long => l }.getOrElse(-1L)
-        StageMeta.record(spark, cat, runId, name, chainFp,
-          (System.nanoTime() - t0) / 1000000, rows)
-        computed += name
+    def write(name: String, df: DataFrame, wallMs: => Long): Unit = {
+      val obs = org.apache.spark.sql.Observation(s"stage_${name}_${System.nanoTime()}")
+      cat.write(df.observe(obs, count(lit(1)).as("rows")), name)
+      val rows = obs.get.get("rows").collect { case l: Long => l }.getOrElse(-1L)
+      StageMeta.record(spark, cat, runId, name, chainFp, wallMs, rows)
+    }
+
+    val staged = new DedupPipeline.Executor {
+      /** Compute-or-reuse one stage; returns the stage read back from disk. */
+      def stage(name: String)(build: => DataFrame): DataFrame = {
+        chainFp = Hashing.xxString(chainFp + "|" + name, Hashing.DefaultSeed).toHexString
+        val reusable = cat.exists(spark, name) &&
+          StageMeta.lastFingerprint(spark, cat, name).contains(chainFp)
+        if (!reusable) {
+          val t0 = System.nanoTime()
+          write(name, build, (System.nanoTime() - t0) / 1000000)
+          computed += name
+        }
+        val df = cat.read(spark, name)
+        if (name == stopAfter) throw new Stopped(df)
+        df
       }
-      cat.read(spark, name)
+
+      // stop_bands carries candidate_pairs' chain fingerprint — it is a
+      // byproduct of exactly that computation — so a resumed run can never
+      // pair a fresh pairs table with a stale stop-band log.
+      def stopBands(log: DataFrame): Unit = write("stop_bands", log, 0L)
+
+      def fork(pass: => DataFrame): () => DataFrame = () => pass
     }
-    def done(name: String) = stopAfter.nonEmpty && stopAfter == name
 
-    val t1 = stage("t1")(ingest.Ingest.ingest(corpus))
-    if (done("t1")) return StagedResult(computed.toSeq, t1)
-
-    // LSH and the suffix pass operate on sha-distinct representatives only
-    // (see DedupPipeline.run scaladoc); exact-star edges reconnect members.
-    val t1d = stage("t1_distinct")(DedupPipeline.distinctByContent(t1))
-    if (done("t1_distinct")) return StagedResult(computed.toSeq, t1d)
-
-    val sigs = stage("signatures")(DedupPipeline.signatures(spark, t1d, cfg))
-    if (done("signatures")) return StagedResult(computed.toSeq, sigs)
-
-    val bands = stage("bands")(lsh.Banding.bandRows(sigs, cfg))
-    if (done("bands")) return StagedResult(computed.toSeq, bands)
-
-    val pairs = stage("candidate_pairs") {
-      val (lshPairs, stopBands) =
-        if (cfg.pairGenJoin) lsh.CandidatePairs.generateJoin(spark, bands, cfg)
-        else lsh.CandidatePairs.generate(spark, bands, cfg)
-      // stop_bands: small side table written inside this stage's closure,
-      // with its own lineage row (same chain fingerprint as candidate_pairs
-      // — it is a byproduct of exactly this computation) so a resumed run
-      // can never pair a fresh pairs table with a stale stop-band log.
-      val obsStop = org.apache.spark.sql.Observation(s"stage_stop_bands_${System.nanoTime()}")
-      cat.write(stopBands.observe(obsStop, count(lit(1)).as("rows")), "stop_bands")
-      StageMeta.record(spark, cat, runId, "stop_bands", chainFp, 0L,
-        obsStop.get.get("rows").collect { case l: Long => l }.getOrElse(-1L))
-      val exact = lsh.CandidatePairs.exactPairs(t1)
-      val sfx = suffix.SuffixPass.containmentPairs(spark, t1d, cfg).select("a", "b", "src")
-      // strongest (not alphabetical min): a pair found by BOTH the suffix
-      // pass and an LSH band must stay 'suffix' so the verified_pairs stage
-      // treats it as verified-by-construction (matches DedupPipeline.run
-      // and the in-repo oracle, which verify LSH pairs before the union).
-      lsh.CandidatePairs.strongest(lshPairs.unionByName(exact).unionByName(sfx))
-    }
-    if (done("candidate_pairs")) return StagedResult(computed.toSeq, pairs)
-
-    val verified = stage("verified_pairs") {
-      val lshSide = verify.Verifier.verifyLshPairs(
-        pairs.where(col("src").isin("minhash", "simhash")), sigs, cfg)
-      val byConstruction = pairs.where(col("src").isin("exact", "suffix"))
-        .withColumn("est_jaccard", lit(1.0d)).select("a", "b", "est_jaccard", "src")
-      lsh.CandidatePairs.strongestWithEst(lshSide.unionByName(byConstruction))
-    }
-    if (done("verified_pairs")) return StagedResult(computed.toSeq, verified)
-
-    val clusters = stage("clusters") {
-      // rep-only CC + pendant-member attach (see DedupPipeline.run)
-      val repEdges = verified.where(col("src") =!= "exact").select("a", "b")
-      val repMapping = cc.ConnectedComponents.run(spark, repEdges)
-      DedupPipeline.attachMembers(t1, repMapping)
-    }
-    if (done("clusters")) return StagedResult(computed.toSeq, clusters)
-
-    val stats = stage("cluster_stats") {
-      clusters.join(t1.select("doc_id", "repo"), "doc_id")
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("size"),
-          countDistinct(col("repo")).as("n_repos"),
-          min(col("doc_id")).as("rep_doc"))
-    }
-    StagedResult(computed.toSeq, if (stopAfter == "cluster_stats") stats else clusters)
+    val out =
+      try DedupPipeline.compose(spark, ingest.Ingest.ingest(corpus), cfg, staged).clusters
+      catch { case s: Stopped => s.at }
+    StagedResult(computed.toSeq, out)
   }
 
   /** spark-submit --class graft.Dedup <inputParquet> <workDir> */

@@ -7,34 +7,50 @@ import graft.conf.DedupConfig
 import graft.kernel.SignatureKernel
 import graft.model.DocRow
 
-/** The end-to-end near-duplicate pipeline as lazy DataFrames
-  * (SURVEY.md §3.2). [[graft.Dedup]] adds per-stage checkpointing/lineage on
-  * top; SparkEntry.queries exposes individual stages for the driver's
+/** The end-to-end near-duplicate pipeline (SURVEY.md §3.2), declared once
+  * as a stage composition ([[compose]]: T1 → t1_distinct → signatures →
+  * bands → candidate_pairs → verified_pairs → clusters → cluster_stats) and
+  * run by one of two [[Executor]]s:
+  *  - [[run]]: lazy and in-session — stages are persisted DataFrames and the
+  *    suffix pass runs on its own thread;
+  *  - [[graft.Dedup.run]]: staged — every stage is written to a catalog,
+  *    read back, and reused on resume by chain fingerprint.
+  * SparkEntry.queries exposes individual stages of [[run]] for the driver's
   * correctness/bench loop.
   */
 object DedupPipeline {
 
   final case class Result(
       t1: DataFrame,
+      t1Distinct: DataFrame,
       signatures: DataFrame,
       bands: DataFrame,
       candidatePairs: DataFrame,
       verifiedPairs: DataFrame,
       clusters: DataFrame,
       clusterStats: DataFrame,
-      stopBands: DataFrame,
-      extraCaches: Seq[DataFrame] = Nil) {
+      stopBands: DataFrame) {
     /** Drop the pipeline-owned cached stages — one-shot callers
       * (benchmarks, repeated run() in one session) must release or the
       * multi-million-row pair caches pin executor memory for the session's
       * life. `t1` is caller-provided (run() persists the caller's handle)
-      * and stays cached for the caller to manage. `extraCaches` holds
-      * internal persisted intermediates (t1Distinct, raw LSH pairs) that no
-      * Result field exposes but that must not outlive the release.
+      * and stays cached for the caller to manage.
       */
     def release(): Unit =
-      (Seq(signatures, bands, candidatePairs, verifiedPairs, clusters) ++ extraCaches)
+      Seq(t1Distinct, signatures, bands, candidatePairs, verifiedPairs, clusters)
         .foreach(_.unpersist(blocking = false))
+  }
+
+  /** How [[compose]] materializes its stages. */
+  trait Executor {
+    /** Materialize stage `name`; returns the handle downstream stages read. */
+    def stage(name: String)(build: => DataFrame): DataFrame
+    /** Record the candidate_pairs build's stop-band log (band, band_hash, cnt). */
+    def stopBands(log: DataFrame): Unit
+    /** Start the suffix pass; the thunk, called once inside the
+      * candidate_pairs build, yields its pairs.
+      */
+    def fork(pass: => DataFrame): () => DataFrame
   }
 
   /** T1 → T3: the fused shingle+MinHash+SimHash typed kernel. Permutation
@@ -68,109 +84,120 @@ object DedupPipeline {
       .toDF("doc_id", "shingles", "n_shingles")
   }
 
-  /** Assemble the full pipeline lazily from a T1 docs table.
-    *
-    * `t1` and `signatures` are referenced by several downstream stages
-    * (bands, both verify joins, exact pairs, suffix pass, final assign) —
-    * persist them so the expensive kernel runs once per action graph. The
-    * spark-submit path ([[Dedup]]) gets the same effect by checkpointing
-    * every stage to a table and reading it back.
+  /** The stage sequence, declared once for both executors. Stage names and
+    * their order are the staged path's resume contract: each stage's chain
+    * fingerprint hashes every name before it.
     */
-  def run(spark: SparkSession, t1in: DataFrame, cfg: DedupConfig = DedupConfig.default,
-      withSuffixPass: Boolean = true): Result = {
-    // t1Distinct is derived from t1 but t1in may itself be persisted by the
-    // caller; persist our own handle (idempotent if already cached)
-    val t1 = t1in.persist()
+  def compose(spark: SparkSession, t1in: => DataFrame, cfg: DedupConfig, ex: Executor): Result = {
+    val t1 = ex.stage("t1")(t1in)
     // LSH/suffix run over sha-distinct docs only (one representative per
     // identical content): identical docs have identical signatures, so
     // their pairs are fully implied by the exact-star edges — and at
     // 10^12-file scale the identical-content mass (empty files, generated
     // code) is the single biggest pair-explosion source. Cluster output is
     // unchanged: rep↔member exact edges glue the components together.
-    val t1Distinct = distinctByContent(t1).persist()
-    val sigs = signatures(spark, t1Distinct, cfg).persist()
-    // bands feed two independent broadcast subtrees (stop + hot counts) and
-    // the salted join — persist so the posexplode isn't recomputed per branch
-    val bands = lsh.Banding.bandRows(sigs, cfg).persist()
-
-    // The suffix pass materializes its candidate table EAGERLY at call time
-    // (localCheckpoint under AQE — see SuffixPass), which used to serialize
-    // the whole gram shuffle AHEAD of every LSH-side job. The two subtrees
-    // are independent until the verified union, so run the suffix pass on
-    // its own thread and spend the wait materializing the sigs/bands caches
-    // every later action needs anyway — work moved earlier, not added (the
-    // caller's first action no longer pays it). t1Distinct is materialized
-    // FIRST, before the fork: both branches read it, and two cold racers
-    // would otherwise each run the ingest + sha-distinct shuffles.
-    val suffixFut =
-      if (withSuffixPass) {
-        t1Distinct.count(): Unit
-        val out = new java.util.concurrent.CompletableFuture[DataFrame]()
-        val th = new Thread(() =>
-          try out.complete(suffix_.containmentPairs(spark, t1Distinct, cfg)
-            .select(col("a"), col("b"), col("src")))
-          catch { case e: Throwable => out.completeExceptionally(e) },
-          "graft-suffix-pass")
-        th.setDaemon(true)
-        th.start()
-        Some(out)
-      } else None
-    if (withSuffixPass) bands.count(): Unit
-
-    val (lshPairs0, stopBands) =
-      if (cfg.pairGenJoin) lsh.CandidatePairs.generateJoin(spark, bands, cfg)
-      else lsh.CandidatePairs.generate(spark, bands, cfg)
-    // the raw LSH pair subtree feeds BOTH the verified tree and the
-    // candidate-reporting tree; persisted so consuming both (the staged
-    // CLI, prewarmPipeline) runs pair generation once, not twice
-    val lshPairs = lshPairs0.persist()
-    // exact-star edges reuse t1Distinct's (sha → min doc_id) instead of
-    // re-aggregating the full corpus (one groupBy shuffle of t1 saved)
+    val t1Distinct = ex.stage("t1_distinct")(distinctByContent(t1))
+    // exact-star pairs and member attach both reuse this (sha → rep)
+    // projection instead of re-aggregating the full corpus
     val repsBySha = t1Distinct.select(col("content_sha256"), col("doc_id").as("rep"))
-    val exact = lsh.CandidatePairs.exactPairsFromReps(t1, repsBySha)
-    val suffix = suffixFut.map(_.get()).getOrElse(spark.emptyDataFrame)
+    // independent of the LSH subtree until the candidate union
+    val suffixPairs = ex.fork(
+      graft.suffix.SuffixPass.containmentPairs(spark, t1Distinct, cfg).select("a", "b", "src"))
+    val sigs = ex.stage("signatures")(signatures(spark, t1Distinct, cfg))
+    val bands = ex.stage("bands")(lsh.Banding.bandRows(sigs, cfg))
 
-    // Verified edge set: LSH pairs pass Jaccard/Hamming; exact and suffix
-    // pairs are verified by construction. Canonical union with src priority.
-    val lshVerified = verify.Verifier.verifyLshPairs(lshPairs, sigs, cfg)
-    val exactV = exact.withColumn("est_jaccard", lit(1.0d)).select("a", "b", "est_jaccard", "src")
-    val suffixV =
-      if (withSuffixPass)
-        suffix.withColumn("est_jaccard", lit(1.0d)).select("a", "b", "est_jaccard", "src")
-      else null
-    val unionAll =
-      if (withSuffixPass) lshVerified.unionByName(exactV).unionByName(suffixV)
-      else lshVerified.unionByName(exactV)
-    // verified/clusters/candidates feed several downstream consumers (stats,
-    // members, novelty, the driver's per-stage queries) — persist so the
-    // pair/verify/CC subtrees run once per session, not once per consumer
-    val verified = lsh.CandidatePairs.strongestWithEst(unionAll).persist()
+    // a resumed candidate_pairs stage never builds, so the log stays empty
+    var stopBands = spark.emptyDataFrame
+    val candidates = ex.stage("candidate_pairs") {
+      val (lshPairs, stop) = lsh.CandidatePairs.generateJoin(spark, bands, cfg)
+      ex.stopBands(stop)
+      stopBands = stop
+      val exact = lsh.CandidatePairs.exactPairsFromReps(t1, repsBySha)
+      // strongest (not alphabetical min): a pair found by BOTH the suffix
+      // pass and an LSH band must stay 'suffix' so verification treats it
+      // as verified-by-construction
+      lsh.CandidatePairs.strongest(lshPairs.unionByName(exact).unionByName(suffixPairs()))
+    }
+
+    // LSH-sourced rows pass Jaccard/Hamming; exact and suffix rows are
+    // verified by construction. The candidate table holds one row per
+    // (a, b), so the two sides are disjoint and need no second collapse.
+    val verified = ex.stage("verified_pairs") {
+      val lshSide = verify.Verifier.verifyLshPairs(
+        candidates.where(col("src").isin("minhash", "simhash")), sigs, cfg)
+      val byConstruction = candidates.where(col("src").isin("exact", "suffix"))
+        .select(col("a"), col("b"), lit(1.0d).as("est_jaccard"), col("src"))
+      lshSide.unionByName(byConstruction)
+    }
 
     // Exact-dup members are pendant vertices: LSH/suffix pairs only touch
     // sha-reps, so a member's sole edge is (rep, member). CC therefore runs
     // on the rep-only edge set and members are attached afterward through
     // the sha→rep mapping — at 10^12-file scale this keeps the iterative
     // CC graph free of the identical-content mass entirely.
-    val repEdges = verified.where(col("src") =!= "exact").select("a", "b")
-    val repMapping = cc.ConnectedComponents.run(spark, repEdges)
-    val clusters = attachMembersVia(t1, repMapping, repsBySha).persist()
+    val clusters = ex.stage("clusters") {
+      val repEdges = verified.where(col("src") =!= "exact").select("a", "b")
+      attachMembersVia(t1, cc.ConnectedComponents.run(spark, repEdges), repsBySha)
+    }
 
-    val stats = clusters.join(t1.select("doc_id", "repo"), "doc_id")
-      .groupBy("cluster_id")
-      .agg(count(lit(1)).as("size"),
-        countDistinct(col("repo")).as("n_repos"),
-        min(col("doc_id")).as("rep_doc"))
-
-    // All candidate sources, canonicalized (T5) — for reporting/fixtures.
-    val candidates = lsh.CandidatePairs.strongest(
-      if (withSuffixPass) lshPairs.unionByName(exact).unionByName(suffix)
-      else lshPairs.unionByName(exact)).persist()
-
-    Result(t1, sigs, bands, candidates, verified, clusters, stats, stopBands,
-      extraCaches = Seq(t1Distinct, lshPairs))
+    val stats = ex.stage("cluster_stats") {
+      clusters.join(t1.select("doc_id", "repo"), "doc_id")
+        .groupBy("cluster_id")
+        .agg(count(lit(1)).as("size"),
+          countDistinct(col("repo")).as("n_repos"),
+          min(col("doc_id")).as("rep_doc"))
+    }
+    Result(t1, t1Distinct, sigs, bands, candidates, verified, clusters, stats, stopBands)
   }
 
-  private val suffix_ = graft.suffix.SuffixPass
+  /** Assemble the full pipeline lazily from a T1 docs table: [[compose]]
+    * under the in-session executor.
+    *
+    * Every stage but the `cluster_stats` leaf feeds several downstream
+    * consumers (stats, members, novelty, the driver's per-stage queries),
+    * so each is persisted and computed once per session. Besides the jobs
+    * ConnectedComponents.run iterates with, only two stages are forced
+    * inside run(): t1Distinct before the suffix fork (both
+    * branches read it, and two cold racers would otherwise each run the
+    * ingest + sha-distinct shuffles), and bands while the suffix pass runs.
+    */
+  def run(spark: SparkSession, t1in: DataFrame, cfg: DedupConfig = DedupConfig.default): Result =
+    compose(spark, t1in, cfg, new InSession)
+
+  /** Persisting executor. The suffix pass materializes its candidate table
+    * EAGERLY at call time (localCheckpoint under AQE — see SuffixPass), so
+    * it runs on its own thread; the fork and the join each first
+    * materialize the newest persisted stage, so the wait is spent on the
+    * caches every later action needs anyway — work moved earlier, not
+    * added.
+    */
+  private final class InSession extends Executor {
+    private var newest: DataFrame = _
+
+    def stage(name: String)(build: => DataFrame): DataFrame = {
+      val df = build
+      if (name == "cluster_stats") df
+      else { newest = df.persist(); newest }
+    }
+
+    def stopBands(log: DataFrame): Unit = ()
+
+    def fork(pass: => DataFrame): () => DataFrame = {
+      newest.count(): Unit
+      val out = new java.util.concurrent.CompletableFuture[DataFrame]()
+      val th = new Thread(() =>
+        try out.complete(pass)
+        catch { case e: Throwable => out.completeExceptionally(e) },
+        "graft-suffix-pass")
+      th.setDaemon(true)
+      th.start()
+      () => {
+        newest.count(): Unit
+        try out.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    }
+  }
 
   /** First-story / novelty detection — the reference's headline capability
     * (Petrović et al., NAACL-HLT 2010: a document whose nearest neighbor is
@@ -210,8 +237,8 @@ object DedupPipeline {
       t1.groupBy("content_sha256").agg(min("doc_id").as("rep")))
 
   /** [[attachMembers]] with the (content_sha256 → rep) table supplied by the
-    * caller — run() passes t1Distinct's projection so the full corpus is not
-    * re-aggregated a second time for a mapping it already holds.
+    * caller — [[compose]] passes t1Distinct's projection so the full corpus
+    * is not re-aggregated a second time for a mapping it already holds.
     */
   def attachMembersVia(t1: DataFrame, repMapping: DataFrame, repsBySha: DataFrame): DataFrame = {
     val docRep = t1.select(col("doc_id"), col("content_sha256"))

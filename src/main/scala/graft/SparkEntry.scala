@@ -520,7 +520,7 @@ object SparkEntry {
       // ReuseExchange nor AQE collapses the duplicated typed kernel+window
       // pipeline — without the checkpoint the tokenize/shingle kernel ran
       // FOUR times per query (same finding and fix as the suffix pass's
-      // candidate checkpoint; see plans/r06/dedup_jaccard_sql_*.txt)
+      // candidate checkpoint, whose plan shape PlanSpec guards)
       val exK = exF.where(col("df") <= JaccardDfCap).localCheckpoint(false)
       val n = exK.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val exJ = exK.where(col("df") >= 2).select("doc_id", "s")

@@ -54,10 +54,6 @@ final case class DedupConfig(
     winnowK: Int = 0,
     seed: Long = 42L,
     version: String = "v1",
-    // Execution-strategy knob (does NOT affect results, hence not part of
-    // the fingerprint): true = Tungsten self-join pair generation; false =
-    // typed groupByKey/flatMapGroups. Same emitted pair set (SaltingSpec).
-    pairGenJoin: Boolean = true,
 ) {
   require(numPerms == bands * rowsPerBand, "numPerms must equal bands*rowsPerBand")
   require(64 % simhashBlocks == 0, "simhashBlocks must divide 64")
@@ -84,9 +80,8 @@ final case class DedupConfig(
     * execution-strategy knobs stay out. stopBandSize changes which band
     * groups are dropped and suffixDfMax changes which grams anchor
     * containment candidates — both semantic. maxBandSize only re-shards hot
-    * groups (pair set provably invariant, SaltingSpec) and pairGenJoin picks
-    * the physical pair-generation plan — both excluded, so flipping them
-    * resumes cleanly instead of invalidating every stage.
+    * groups (pair set provably invariant, SaltingSpec), so it is excluded:
+    * changing it resumes cleanly instead of invalidating every stage.
     */
   def fingerprint: String =
     s"$version:k$shingleK:p$numPerms:b${bands}x$rowsPerBand:sb$simhashBlocks" +

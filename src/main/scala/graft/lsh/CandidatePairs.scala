@@ -4,15 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.conf.DedupConfig
-import graft.model.{BandedDoc, Pair}
 
 /** T4 → T5 candidate-pair generation with explicit skew handling
   * (SURVEY.md §2 rows 18–19, 22) — the north rule's "explicit salting for
-  * skewed bands". AQE cannot fix this: a quadratic `flatMapGroups` group is
-  * one task no matter how the join partitions are split, so the salt must
-  * change the grouping key itself.
+  * skewed bands". AQE cannot fix this: a quadratic (band, band_hash) group
+  * is one join key no matter how the join partitions are split, so the salt
+  * must change the join key itself.
   *
-  * Strategy (one count pre-pass + one grouped shuffle):
+  * Strategy ([[generateJoin]]: one count pre-pass + one self-join):
   *  1. `groupBy(band, band_hash).count` finds group sizes (cheap additive
   *     agg, map-side partial).
   *  2. Groups > `stopBandSize` are dropped entirely ("stop bands" — license
@@ -24,18 +23,19 @@ import graft.model.{BandedDoc, Pair}
   *     : x ∈ [0,s)} — triangle partitioning. Every unordered doc pair of the
   *     hot group lands in exactly one (i,j) bucket-pair group of ~2·
   *     maxBandSize docs, so the quadratic work is spread over s(s+1)/2
-  *     bounded tasks instead of one. The emitted pair SET is identical to
-  *     the unsalted one (verified by SaltingSpec).
-  *  4. `flatMapGroups` emits pairs a<b streamingly per group — NOT a
-  *     self-join, which would shuffle the band table twice and materialize
-  *     each pair twice before dedup.
+  *     bounded join keys instead of one. The emitted pair SET is identical
+  *     to the unsalted one (SaltingSpec checks it against the never-salting
+  *     ReferenceOracle).
+  *  4. A sort-merge self equi-join on the packed (band_hash, band/i/j) key
+  *     emits each pair a<b once per colliding band; [[strongest]] collapses
+  *     the bands to one row per pair.
   */
 object CandidatePairs {
 
   /** Canonical pair-source collapse: one row per (a,b) keeping the strongest
     * source. Verified-by-construction sources (exact, suffix) outrank the
     * LSH sources: a containment pair (low Jaccard, Hamming > 3) that ALSO
-    * collides in one band must keep src='suffix', or the staged path would
+    * collides in one band must keep src='suffix', or verification would
     * route it through the est/hamming check and silently drop it —
     * alphabetical min("src") had exactly that bug (suffix > minhash).
     *
@@ -55,78 +55,11 @@ object CandidatePairs {
     pairs.groupBy("a", "b").agg(min(srcPriority).as("srcp"))
       .select(col("a"), col("b"), srcFromPriority(col("srcp")).as("src"))
 
-  /** Same, also carrying max est_jaccard. Input: a, b, est_jaccard, src. */
-  def strongestWithEst(pairs: DataFrame): DataFrame =
-    pairs.groupBy("a", "b")
-      .agg(min(srcPriority).as("srcp"), max("est_jaccard").as("est_jaccard"))
-      .select(col("a"), col("b"), col("est_jaccard"), srcFromPriority(col("srcp")).as("src"))
-
-  /** @return (candidate pairs `a,b,src` deduped with src priority,
-    *          stop-band log `band,band_hash,cnt`)
-    */
-  def generate(spark: SparkSession, bandRows: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
-    import spark.implicits._
-
-    val counts = bandRows.groupBy("band", "band_hash").agg(count(lit(1)).as("cnt"))
-    val stop = counts.where(col("cnt") > cfg.stopBandSize)
-    val hot = counts
-      .where(col("cnt") > cfg.maxBandSize && col("cnt") <= cfg.stopBandSize)
-      .select(col("band"), col("band_hash"),
-        ceil(col("cnt") / cfg.maxBandSize.toDouble).cast("int").as("s"))
-
-    // Hot/stop band lists are tiny by construction (they are the tail of the
-    // group-size distribution) → broadcast both sides.
-    val salted = bandRows
-      .join(broadcast(stop.select("band", "band_hash")), Seq("band", "band_hash"), "left_anti")
-      .join(broadcast(hot), Seq("band", "band_hash"), "left")
-      .na.fill(Map("s" -> 1))
-      .withColumn("salt", pmod(xxhash64(col("doc_id")), col("s")).cast("int"))
-
-    val exploded = salted
-      .select(col("band"), col("band_hash"), col("doc_id"), col("salt"),
-        explode(transform(sequence(lit(0), col("s") - 1),
-          x => struct(least(x, col("salt")).as("i"), greatest(x, col("salt")).as("j")))).as("bp"))
-      .select(col("band"), col("band_hash"), col("bp.i").as("i"), col("bp.j").as("j"),
-        col("doc_id"), col("salt"))
-      .as[BandedDoc]
-
-    val nMinhashBands = cfg.bands
-    val rawPairs = exploded
-      .groupByKey(r => (r.band, r.band_hash, r.i, r.j))
-      .flatMapGroups { (key: (Int, Long, Int, Int), it: Iterator[BandedDoc]) =>
-        val (band, _, i, j) = key
-        val src = if (band < nMinhashBands) "minhash" else "simhash"
-        if (i == j) {
-          val docs = it.map(_.doc_id).toArray
-          java.util.Arrays.sort(docs)
-          for {
-            x <- docs.indices.iterator
-            y <- (x + 1 until docs.length).iterator
-            if docs(x) != docs(y)
-          } yield Pair(docs(x), docs(y), src)
-        } else {
-          val left = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val right = scala.collection.mutable.ArrayBuffer.empty[Long]
-          it.foreach(d => if (d.salt == i) left += d.doc_id else right += d.doc_id)
-          for {
-            a <- left.iterator
-            b <- right.iterator
-            if a != b
-          } yield Pair(math.min(a, b), math.max(a, b), src)
-        }
-      }
-
-    (strongest(rawPairs.toDF()), stop)
-  }
-
-  /** Tungsten variant of [[generate]]: the identical salted triangle
-    * scheme expressed as a self equi-join instead of
-    * groupByKey/flatMapGroups. Same emitted pair SET (asserted by
-    * SaltingSpec); radically lower allocation rate — the typed path
-    * materializes one JVM object per replicated band row and per emitted
-    * pair, which made pair generation GC-bound and scale NEGATIVELY from
-    * 8→32 local cores. SMJ buffers one bounded (≤ 2·maxBandSize) key group
-    * at a time in UnsafeRow form.
+  /** The salted triangle scheme as a Tungsten self equi-join. A typed
+    * groupByKey/flatMapGroups formulation materializes one JVM object per
+    * replicated band row and per emitted pair, which made pair generation
+    * GC-bound and scale NEGATIVELY from 8→32 local cores; SMJ buffers one
+    * bounded (≤ 2·maxBandSize) key group at a time in UnsafeRow form.
     *
     * Shuffle diet (this stage dominates e2e wall time at scale): each join
     * side carries exactly 3 longs — `band_hash`, `pk` (band, i, j packed
@@ -137,6 +70,9 @@ object CandidatePairs {
     * not twice, and the post-shuffle join condition only needs `dl < dr` on
     * diagonal buckets (i == j, recovered from pk). Net ≈ 4× fewer shuffled
     * bytes than the naive 6-column both-sides formulation.
+    *
+    * @return (candidate pairs `a,b,src` deduped with src priority,
+    *          stop-band log `band,band_hash,cnt`)
     */
   def generateJoin(spark: SparkSession, bandRows: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
     // pk layout: band in bits 0-7, i in bits 8-35, j in bits 36-63.
@@ -189,27 +125,13 @@ object CandidatePairs {
     (pairs, stop)
   }
 
-  /** Exact-duplicate star pairs by content sha256 (row 20). Deliberately NOT
-    * `collect_list` (a 10^12-file corpus has billion-row identical-content
-    * groups — empty files); group → min rep → join back keeps every task
-    * linear in its partition.
-    */
-  def exactPairs(t1: DataFrame): DataFrame = {
-    val reps = t1.groupBy("content_sha256")
-      .agg(min("doc_id").as("a"), count(lit(1)).as("cnt"))
-      .where(col("cnt") > 1)
-      .select("content_sha256", "a")
-    t1.select(col("content_sha256"), col("doc_id"))
-      .join(reps, "content_sha256")
-      .where(col("doc_id") =!= col("a"))
-      .select(col("a"), col("doc_id").as("b"), lit("exact").as("src"))
-  }
-
-  /** [[exactPairs]] with the (content_sha256 → rep) table supplied by the
-    * caller (DedupPipeline.run passes t1Distinct's projection): saves the
-    * full-corpus groupBy when the rep table already exists. Identical
-    * output — a size-1 sha group only joins its own rep row, which the
-    * `doc_id =!= rep` filter drops, so the cnt > 1 pre-filter is implied.
+  /** Exact-duplicate star pairs by content sha256 (row 20), from the
+    * (content_sha256 → rep) table the caller already holds (t1Distinct's
+    * projection): every non-rep doc pairs with its sha's rep. Deliberately
+    * NOT `collect_list` (a 10^12-file corpus has billion-row
+    * identical-content groups — empty files); the join keeps every task
+    * linear in its partition. A size-1 sha group only joins its own rep
+    * row, which the `doc_id =!= rep` filter drops.
     */
   def exactPairsFromReps(t1: DataFrame, repsBySha: DataFrame): DataFrame =
     t1.select(col("content_sha256"), col("doc_id"))

@@ -28,15 +28,6 @@ final case class Signature(
   */
 final case class BandRow(doc_id: Long, band: Int, band_hash: Long)
 
-/** T5/T6 — candidate / verified pair. Canonical orientation a < b.
-  * src priority (strongest wins): exact < suffix < minhash < simhash —
-  * by-construction sources outrank LSH (see CandidatePairs.strongest).
-  * Verified pairs add est_jaccard:double; clusters are (doc_id,
-  * cluster_id = min member) — both stay DataFrames (no typed kernel ever
-  * consumes them, so no encoder case classes are needed).
-  */
-final case class Pair(a: Long, b: Long, src: String)
-
 /** Candidate pair with its emitting bucket key — the provenance that lets a
   * read-time filter apply the stop-band rule retroactively (streaming
   * emission cannot be taken back; see StreamingLsh.retroLive /
@@ -46,12 +37,6 @@ final case class ProvPair(a: Long, b: Long, src: String, band: Int, band_hash: L
 
 /** Suffix-pass tokens: ordered (non-distinct) token hashes per doc. */
 final case class TokenDoc(doc_id: Long, tokens: Array[Long])
-
-/** Salted band row during candidate generation: (i, j) is the triangle
-  * bucket-pair this replica participates in.
-  */
-final case class BandedDoc(
-    band: Int, band_hash: Long, i: Int, j: Int, doc_id: Long, salt: Int)
 
 /** Per-(band, band_hash) streaming-LSH state: doc ids seen in the bucket;
   * `stopped` buckets crossed the stop cap and emit nothing further (the

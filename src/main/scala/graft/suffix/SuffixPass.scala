@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Hashing
 import graft.conf.DedupConfig
 import graft.kernel.SignatureKernel
-import graft.model.{DocRow, Pair, TokenDoc}
+import graft.model.{DocRow, TokenDoc}
 
 /** Contained-duplicate pass (SURVEY.md §2 row 21): catches file A embedded
   * verbatim in file B, which Jaccard misses when |A| ≪ |B| (resemblance vs

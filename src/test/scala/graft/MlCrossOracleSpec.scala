@@ -23,7 +23,7 @@ class MlCrossOracleSpec extends AnyFunSuite with SparkTestBase {
     val corpus = FixtureGen.corpus(800, 99L)
     val t1 = Ingest.ingest(spark.createDataFrame(corpus)
       .select("repo", "path", "commit", "lang", "content"))
-    val res = DedupPipeline.run(spark, t1, cfg, withSuffixPass = false)
+    val res = DedupPipeline.run(spark, t1, cfg)
     val ours = res.verifiedPairs.select("a", "b").as[(Long, Long)].collect().toSet
 
     // featurize: distinct shingle hashes -> sparse binary vector

@@ -33,6 +33,19 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     assert(second.computed.isEmpty, s"recomputed: ${second.computed}")
     assert(second.clusters.as[(Long, Long)].collect().toMap ===
       first.clusters.as[(Long, Long)].collect().toMap)
+    // Chain fingerprints pinned to the values work dirs already hold: a
+    // renamed, reordered or re-chained stage (or a config-fingerprint
+    // change) would stop existing work dirs from resuming.
+    val fps = io.StageMeta.read(spark, new io.ParquetCatalog(dir))
+      .where($"partition_file" === "_total")
+      .select("stage", "input_fingerprint").distinct()
+      .as[(String, String)].collect().toMap
+    assert(fps === Map(
+      "t1" -> "8e4b793e3bb373c4", "t1_distinct" -> "d628a9014326bdef",
+      "signatures" -> "b588e561c2cd70cd", "bands" -> "74fa601fde87f66e",
+      "candidate_pairs" -> "a72000d8205fcaa5", "stop_bands" -> "a72000d8205fcaa5",
+      "verified_pairs" -> "4ab1e0ee31058ac9", "clusters" -> "a95870012e83d40e",
+      "cluster_stats" -> "18a9f705edb1ee6c"))
   }
 
   test("kill after 'bands' resumes exactly the remaining stages with identical output") {

@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.conf.DedupConfig
 import graft.ingest.Ingest
-import graft.testutil.FixtureGen
+import graft.testutil.{FixtureGen, ReferenceOracle}
 
 /** Salting must be a pure re-partitioning of work: the emitted pair SET is
   * identical whether hot bands are split into 1, few, or many salt buckets
-  * (SURVEY.md §5.2 property 4). Also: pipeline output is invariant under
-  * input repartitioning.
+  * (SURVEY.md §5.2 property 4), and equal to the never-salting
+  * ReferenceOracle's. Also: pipeline output is invariant under input
+  * repartitioning.
   */
 class SaltingSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -19,8 +20,9 @@ class SaltingSpec extends AnyFunSuite with SparkTestBase {
 
   private def pairSet(cfg: DedupConfig, repart: Int): Set[(Long, Long, String)] = {
     val t = if (repart > 0) t1.repartition(repart) else t1
-    val res = DedupPipeline.run(spark, t, cfg, withSuffixPass = false)
-    res.candidatePairs.select("a", "b", "src").as[(Long, Long, String)].collect().toSet
+    val res = DedupPipeline.run(spark, t, cfg)
+    try res.candidatePairs.select("a", "b", "src").as[(Long, Long, String)].collect().toSet
+    finally { res.release(); res.t1.unpersist(blocking = false) }
   }
 
   test("pair set invariant under maxBandSize (salting on/off/aggressive)") {
@@ -31,12 +33,13 @@ class SaltingSpec extends AnyFunSuite with SparkTestBase {
     assert(extreme === base, "maxBandSize=3 diverged")
   }
 
-  test("join-based and groupBy-based pair generation emit the identical set") {
-    for (mbs <- Seq(3, 25, 1000000)) {
-      val grouped = pairSet(DedupConfig(maxBandSize = mbs, pairGenJoin = false), 0)
-      val joined = pairSet(DedupConfig(maxBandSize = mbs, pairGenJoin = true), 0)
-      assert(joined === grouped,
-        s"mbs=$mbs: extra=${(joined diff grouped).take(3)} missing=${(grouped diff joined).take(3)}")
+  test("salted candidate set equals the unsalted reference oracle's") {
+    for (mbs <- Seq(3, 25)) {
+      val cfg = DedupConfig(maxBandSize = mbs)
+      val got = pairSet(cfg, 0).map(p => (p._1, p._2))
+      val want = ReferenceOracle.run(corpus, cfg).candidatePairs
+      assert(got === want,
+        s"mbs=$mbs: extra=${(got diff want).take(3)} missing=${(want diff got).take(3)}")
     }
   }
 

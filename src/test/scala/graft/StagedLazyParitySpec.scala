@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.conf.DedupConfig
@@ -10,8 +11,10 @@ import graft.ingest.Ingest
 import graft.io.ParquetCatalog
 import graft.model.CorpusRow
 
-/** The staged CLI ([[Dedup]]) and the lazy pipeline ([[DedupPipeline]]) must
-  * produce identical verified pairs and clusters — including on the case
+/** The staged executor ([[Dedup]]) and the lazy one ([[DedupPipeline.run]])
+  * run one stage composition and must produce identical candidate pairs,
+  * stop-band logs, verified pairs, clusters and cluster stats — including
+  * on the case
   * that broke round 1: a pair emitted by BOTH the suffix pass and an LSH
   * band, where the LSH est/hamming check fails. The staged path used to
   * collapse sources with alphabetical min("src") before verification
@@ -68,27 +71,62 @@ class StagedLazyParitySpec extends AnyFunSuite with SparkTestBase {
     assert(lshSet.contains(pairAB), "trigger pair must collide in some LSH band")
   }
 
-  test("staged verified pairs/clusters equal the lazy pipeline's, overlap pair kept as suffix") {
+  private def staged(docs: Seq[CorpusRow], c: DedupConfig): ParquetCatalog = {
     val dir = Files.createTempDirectory("graft-parity").toString
-    Dedup.run(spark, spark.createDataFrame(corpus)
-      .select("repo", "path", "commit", "lang", "content"), dir, cfg, inputId = "parity")
-    val cat = new ParquetCatalog(dir)
+    Dedup.run(spark, spark.createDataFrame(docs)
+      .select("repo", "path", "commit", "lang", "content"), dir, c, inputId = "parity")
+    new ParquetCatalog(dir)
+  }
 
+  private def rowSet(df: DataFrame): Set[Seq[Any]] =
+    df.select(df.columns.sorted.toSeq.map(col): _*).collect().map(_.toSeq).toSet
+
+  /** Every table the two executors both produce, row for row. */
+  private def assertParity(cat: ParquetCatalog, res: DedupPipeline.Result): Unit =
+    Seq("candidate_pairs" -> res.candidatePairs, "stop_bands" -> res.stopBands,
+        "verified_pairs" -> res.verifiedPairs, "clusters" -> res.clusters,
+        "cluster_stats" -> res.clusterStats).foreach { case (name, lazyDf) =>
+      val (got, want) = (rowSet(cat.read(spark, name)), rowSet(lazyDf))
+      assert(got === want,
+        s"$name: staged-only=${(got diff want).take(3)} lazy-only=${(want diff got).take(3)}")
+    }
+
+  test("staged verified pairs/clusters equal the lazy pipeline's, overlap pair kept as suffix") {
+    val cat = staged(corpus, cfg)
+    assertParity(cat, lazyRes)
+
+    // the containment pair survived with by-construction source
     val stagedVerified = cat.read(spark, "verified_pairs")
       .select("a", "b", "src").as[(Long, Long, String)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
-    val lazyVerified = lazyRes.verifiedPairs
-      .select("a", "b", "src").as[(Long, Long, String)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    assert(stagedVerified === lazyVerified)
-
-    // the containment pair survived with by-construction source
     assert(stagedVerified.get(pairAB) === Some("suffix"))
-
-    val stagedClusters = cat.read(spark, "clusters").as[(Long, Long)].collect().toMap
-    val lazyClusters = lazyRes.clusters.as[(Long, Long)].collect().toMap
-    assert(stagedClusters === lazyClusters)
     // A and B are clustered together despite failing the LSH verify rule
+    val stagedClusters = cat.read(spark, "clusters").as[(Long, Long)].collect().toMap
     assert(stagedClusters(idA) === stagedClusters(idB))
+  }
+
+  test("parity holds when stop bands and salting bite") {
+    // a 12-doc near-identical family: band groups past stopBandSize are
+    // dropped and logged, those past maxBandSize are salted
+    val body = (0 until 80).map(i => s"fam$i").mkString(" ")
+    val family = (0 until 12).map(i =>
+      CorpusRow("r3", s"fam$i.txt", "c1", "scala", s"$body uniq$i"))
+    val docs = corpus ++ family
+    val c = cfg.copy(stopBandSize = 8, maxBandSize = 3)
+    val cat = staged(docs, c)
+    val res = DedupPipeline.run(spark, Ingest.ingest(spark.createDataFrame(docs)
+      .select("repo", "path", "commit", "lang", "content")).repartition(4), c)
+    assert(res.stopBands.count() > 0, "scenario broken: no band group crossed stopBandSize")
+    assertParity(cat, res)
+    res.release()
+  }
+
+  test("a failing suffix pass surfaces its own exception under both executors") {
+    // winnowK 60 > suffixMinLen 50 fails winnowKEff's require on the suffix
+    // pass (the lazy executor's own thread); the staged executor meets it
+    // first in the config fingerprint
+    val bad = DedupConfig(suffixIndexMode = "winnow", winnowK = 60)
+    intercept[IllegalArgumentException](DedupPipeline.run(spark, t1, bad))
+    intercept[IllegalArgumentException](staged(corpus, bad))
   }
 }

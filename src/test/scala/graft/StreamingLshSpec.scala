@@ -41,11 +41,11 @@ class StreamingLshSpec extends AnyFunSuite with SparkTestBase {
       .select("a", "b").as[(Long, Long)].collect().toSet
 
     // batch twin: same full doc set (no sha-distinct here — the stream
-    // bands every doc), groupBy-based generator
+    // bands every doc), the batch pipeline's generator
     val t1 = ingest.Ingest.ingest(
       spark.createDataFrame(corpus).select("repo", "path", "commit", "lang", "content"))
     val sigs = DedupPipeline.signatures(spark, t1, cfg)
-    val (batchPairs, _) = lsh.CandidatePairs.generate(
+    val (batchPairs, _) = lsh.CandidatePairs.generateJoin(
       spark, lsh.Banding.bandRows(sigs, cfg), cfg)
     val expected = batchPairs.select("a", "b").as[(Long, Long)].collect().toSet
 
@@ -76,7 +76,7 @@ class StreamingLshSpec extends AnyFunSuite with SparkTestBase {
     val streamed = spark.table("stream_lsh_verified")
       .select("a", "b").as[(Long, Long)].collect().toSet
 
-    val (batchPairs, _) = lsh.CandidatePairs.generate(
+    val (batchPairs, _) = lsh.CandidatePairs.generateJoin(
       spark, lsh.Banding.bandRows(sigs, cfg), cfg)
     val expected = verify.Verifier.verifyLshPairs(batchPairs, sigs, cfg)
       .select("a", "b").as[(Long, Long)].collect().toSet
@@ -122,7 +122,7 @@ class StreamingLshSpec extends AnyFunSuite with SparkTestBase {
       val (x, y) = (shaOf(a), shaOf(b)); if (x <= y) (x, y) else (y, x)
     }
     val reps = DedupPipeline.distinctByContent(t1)
-    val (batchPairs, _) = lsh.CandidatePairs.generate(
+    val (batchPairs, _) = lsh.CandidatePairs.generateJoin(
       spark, lsh.Banding.bandRows(DedupPipeline.signatures(spark, reps, tiny), tiny), tiny)
     val expected = shaPairs(batchPairs.select("a", "b").as[(Long, Long)].collect().toSet)
     assert(expected.nonEmpty, "scenario broken: rep-only batch must find the (A, B) pair")

@@ -62,7 +62,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
     val t1 = ingest.Ingest.ingest(
       spark.createDataFrame(corpus).select("repo", "path", "commit", "lang", "content"))
-    val batch = DedupPipeline.run(spark, t1, cfg, withSuffixPass = true)
+    val batch = DedupPipeline.run(spark, t1, cfg)
 
     // Both engines run LSH/suffix over sha-distinct reps, but pick reps
     // differently (global min doc_id vs first arrival), so the near-dup

@@ -98,11 +98,11 @@ object ReferenceOracle {
 
     // exact pairs: star from min doc per sha
     val bySha = ids.groupBy(sha)
-    val exactPairs = mutable.Set.empty[(Long, Long)]
+    val starPairs = mutable.Set.empty[(Long, Long)]
     bySha.values.foreach { g =>
       if (g.size > 1) {
         val m = g.min
-        g.foreach(d => if (d != m) exactPairs += ((m, d)))
+        g.foreach(d => if (d != m) starPairs += ((m, d)))
       }
     }
 
@@ -148,7 +148,7 @@ object ReferenceOracle {
     lshPairs.foreach { case p @ (a, b) =>
       if (estJaccard(a, b) >= cfg.jaccardTau || hamming(a, b) <= cfg.hammingMax) verified += p
     }
-    verified ++= exactPairs
+    verified ++= starPairs
     verified ++= suffixPairs
 
     // union-find clustering
@@ -175,7 +175,7 @@ object ReferenceOracle {
     }
 
     Result(ids, sha.toMap, sigs.toMap,
-      (lshPairs ++ exactPairs ++ suffixPairs).toSet,
+      (lshPairs ++ starPairs ++ suffixPairs).toSet,
       verified.toSet, clusters.toMap)
   }
 }
