@@ -26,48 +26,13 @@ object SparkEntry {
 
   // Eight queries expose stages of the SAME pipeline run; memoize the lazy
   // Result per (session, input) so the driver's Verify/Bench loops don't
-  // rebuild the persisted t1/signature/band trees once per query. The cache
-  // stores the owning session and rebuilds on identity mismatch, so a fresh
-  // session never sees another (possibly stopped) session's persisted
-  // plans, and stale entries are replaced rather than accumulated.
-  private val pipeCache =
-    scala.collection.concurrent.TrieMap.empty[String, (SparkSession, DedupPipeline.Result)]
-
-  private def releaseResult(r: DedupPipeline.Result): Unit =
-    // unpersist on a stopped context throws — ignore
-    scala.util.Try { r.release(); r.t1.unpersist(false) }
+  // rebuild the persisted t1/signature/band trees once per query.
+  private val pipelines = new SessionMemo[String, DedupPipeline.Result](r => {
+    r.release(); r.t1.unpersist(false)
+  })
 
   private def pipeline(spark: SparkSession, sfDir: String): DedupPipeline.Result =
-    pipeCache.get(sfDir) match {
-      case Some((owner, res)) if owner eq spark => res
-      case stale =>
-        // same-key entry owned by a replaced session: evict it BEFORE
-        // building. Only release its caches when the owning context is
-        // actually stopped — with concurrent sessions sharing one live
-        // SparkContext an unconditional unpersist here would drop a LIVE
-        // session's caches mid-query (the same hazard the putIfAbsent race
-        // branch below avoids); a live-but-abandoned owner's caches are
-        // left to the context's lifecycle instead
-        stale.foreach { case (owner, old) =>
-          if (pipeCache.remove(sfDir, stale.get) && owner.sparkContext.isStopped)
-            releaseResult(old)
-        }
-        val res = DedupPipeline.run(spark, docsT1(spark, sfDir), cfg)
-        pipeCache.putIfAbsent(sfDir, (spark, res)) match {
-          case Some((owner, winner)) if owner eq spark =>
-            // lost a same-session build race: use the winner and drop our
-            // duplicate caches (a blind put here would instead unpersist the
-            // Result the other thread is mid-query on)
-            releaseResult(res)
-            winner
-          case Some(_) =>
-            // raced with a different session's build for the same key — keep
-            // ours un-cached rather than unpersist state another live
-            // session may be using
-            res
-          case None => res
-        }
-    }
+    pipelines(spark, sfDir)(DedupPipeline.run(spark, docsT1(spark, sfDir), cfg))
 
   /** Shared preamble of the two exact-Jaccard surfaces: the memoized
     * pipeline result plus the sha-distinct reps' shingle arrays. The
@@ -75,26 +40,11 @@ object SparkEntry {
     * DataFrame — dedup_exact_jaccard and dedup_cand_jaccard otherwise each
     * re-ran the ingest + sha-distinct + tokenize/shingle kernel.
     */
-  private val shinglesCache =
-    scala.collection.concurrent.TrieMap.empty[String, (SparkSession, DataFrame)]
+  private val shingles = new SessionMemo[String, DataFrame](_.unpersist(blocking = false))
 
   private def repShingles(s: SparkSession, d: String): (DedupPipeline.Result, DataFrame) = {
-    val sh = shinglesCache.get(d) match {
-      case Some((owner, df)) if owner eq s => df
-      case stale =>
-        stale.foreach { case e @ (owner, df) =>
-          if (shinglesCache.remove(d, e) && owner.sparkContext.isStopped)
-            scala.util.Try(df.unpersist(blocking = false))
-        }
-        val df = DedupPipeline.shingled(
-          s, DedupPipeline.distinctByContent(docsT1(s, d)), cfg).persist()
-        shinglesCache.putIfAbsent(d, (s, df)) match {
-          case Some((owner, winner)) if owner eq s =>
-            df.unpersist(blocking = false); winner
-          case Some(_) => df
-          case None => df
-        }
-    }
+    val sh = shingles(s, d)(DedupPipeline.shingled(
+      s, DedupPipeline.distinctByContent(docsT1(s, d)), cfg).persist())
     (pipeline(s, d), sh)
   }
 
@@ -119,38 +69,6 @@ object SparkEntry {
 
   private def origClusters(res: DedupPipeline.Result): DataFrame =
     relabelOrig(res.clusters, res.t1)
-
-  /** Incremental-engine state for the driver loop: the corpus fed through
-    * [[graft.streaming.IncrementalDedup.processBatch]] in FOUR
-    * deterministic splits (original doc_id mod 4) with a MID-STREAM
-    * [[graft.streaming.IncrementalDedup.compactState]] after batch 2, so
-    * the driver-checked path really exercises batch appends, the
-    * generational base AND a post-compaction append. Four batches, not
-    * three: compaction always excludes the newest committed batch (the
-    * streaming-replay guarantee), so with only two committed batches it is
-    * a provable NO-OP — three committed batches is the minimum that
-    * actually merges something (base over 0–1, batch 2 preserved, batch 3
-    * appended after). `incr_clusters` / `incr_cluster_stats` are then
-    * oracled by the SAME recursive-CTE twin as the batch queries, putting
-    * incremental ≡ batch under the driver's independent DuckDB check
-    * (round-3 VERDICT item #1). Engine doc_ids are xxhash64(repo, path,
-    * commit) of the same canonical corpus rows the batch path ingests —
-    * the projection is SHARED ([[Ingest.documentsToCorpus]]), not
-    * duplicated, so the id spaces cannot silently drift apart. Memoized
-    * per (session, sfDir) like the pipeline cache: the state build is the
-    * expensive part and is shared by both queries (Bench attributes it to
-    * its own `incr_build` entry); a lost build race only orphans a temp
-    * dir, and every temp dir self-deletes on JVM exit.
-    */
-  /** Memoized-once state build: `lazy val` inside gives each cache entry
-    * single-execution semantics, so two concurrent first callers can both
-    * insert-or-adopt an entry and exactly one build runs (the round-4
-    * check-then-act let both run the expensive 4-batch build).
-    */
-  private final class IncrBuild(f: () => String) { lazy val value: String = f() }
-
-  private val incrCache =
-    scala.collection.concurrent.TrieMap.empty[String, (SparkSession, IncrBuild)]
 
   // ONE shutdown hook draining the temp-dir list (a hook per build was
   // unbounded across many sfDirs/sessions)
@@ -204,50 +122,44 @@ object SparkEntry {
     dir
   }
 
+  private val incrStates = new SessionMemo[String, String](_ => ())
+
+  /** Incremental-engine state for the driver loop: the corpus fed through
+    * [[graft.streaming.IncrementalDedup.processBatch]] in FOUR
+    * deterministic splits (original doc_id mod 4) with a MID-STREAM
+    * [[graft.streaming.IncrementalDedup.compactState]] after batch 2, so
+    * the driver-checked path really exercises batch appends, the
+    * generational base AND a post-compaction append. Four batches, not
+    * three: compaction always excludes the newest committed batch (the
+    * streaming-replay guarantee), so with only two committed batches it is
+    * a provable NO-OP — three committed batches is the minimum that
+    * actually merges something (base over 0–1, batch 2 preserved, batch 3
+    * appended after). `incr_clusters` / `incr_cluster_stats` are then
+    * oracled by the SAME recursive-CTE twin as the batch queries, putting
+    * incremental ≡ batch under the driver's independent DuckDB check
+    * (round-3 VERDICT item #1). Engine doc_ids are xxhash64(repo, path,
+    * commit) of the same canonical corpus rows the batch path ingests —
+    * the projection is SHARED ([[Ingest.documentsToCorpus]]), not
+    * duplicated, so the id spaces cannot silently drift apart. Memoized
+    * per (session, sfDir): the state build is the expensive part and is
+    * shared by both queries (Bench attributes it to its own `incr_build`
+    * entry). Eviction releases nothing: a query may still be reading an
+    * evicted dir, so every temp dir is deleted by the shutdown hook only.
+    */
+  private def incrState(spark: SparkSession, sfDir: String): String =
+    incrStates(spark, sfDir)(buildIncrState(spark, sfDir))
+
   // incr_clusters and incr_cluster_stats both need the SAME relabeled
   // cluster assignment over the incremental state — without sharing, each
   // query re-reads the whole state, re-runs CC and re-relabels (~2 s of
-  // identical work per query at sf0.1). Memoized per (session, input) with
-  // a persisted DataFrame, exactly like the pipeline cache: in-session
-  // reuse only, always computed from the parquet state of THIS run.
-  private val incrClCache =
-    scala.collection.concurrent.TrieMap.empty[String, (SparkSession, DataFrame)]
+  // identical work per query at sf0.1). In-session reuse only, always
+  // computed from the parquet state of THIS run.
+  private val incrClusters = new SessionMemo[String, DataFrame](_.unpersist(blocking = false))
 
   private def incrClustersOrig(s: SparkSession, d: String): DataFrame =
-    incrClCache.get(d) match {
-      case Some((owner, df)) if owner eq s => df
-      case stale =>
-        // evict a replaced session's entry; only unpersist when its context
-        // is really stopped (same live-session hazard as pipeCache)
-        stale.foreach { case e @ (owner, df) =>
-          if (incrClCache.remove(d, e) && owner.sparkContext.isStopped)
-            scala.util.Try(df.unpersist(blocking = false))
-        }
-        val df = relabelOrig(
-          graft.streaming.IncrementalDedup.clusters(s, incrState(s, d), cfg),
-          docsT1(s, d)).persist()
-        incrClCache.putIfAbsent(d, (s, df)) match {
-          case Some((owner, winner)) if owner eq s =>
-            df.unpersist(blocking = false); winner
-          case Some(_) => df
-          case None => df
-        }
-    }
-
-  private def incrState(spark: SparkSession, sfDir: String): String = {
-    val mine = (spark, new IncrBuild(() => buildIncrState(spark, sfDir)))
-    val entry = incrCache.get(sfDir) match {
-      case Some(e @ (owner, _)) if owner eq spark => e
-      case stale =>
-        stale.foreach(s => incrCache.remove(sfDir, s))
-        incrCache.putIfAbsent(sfDir, mine) match {
-          case Some(e @ (owner, _)) if owner eq spark => e // lost same-session race
-          case Some(_) => mine // different session owns the slot: build un-cached
-          case None => mine
-        }
-    }
-    entry._2.value
-  }
+    incrClusters(s, d)(relabelOrig(
+      graft.streaming.IncrementalDedup.clusters(s, incrState(s, d), cfg),
+      docsT1(s, d)).persist())
 
   /** Shared DuckDB oracle fragment: the SQL-expressible twin of the dedup
     * core (SURVEY §2 row 11's "SQL-only shingle twin"), mirroring ALL THREE

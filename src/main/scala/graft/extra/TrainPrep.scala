@@ -85,10 +85,9 @@ object TrainPrep {
   // tokenized scan feeds THREE jobs (min/max agg, per-bucket offsets, the
   // final windowed join) plus shardStats' rollup — without the persist each
   // consumer re-ran the full corpus scan + tokenize (round-5 verdict
-  // "What's wrong" #1). Entries owned by a replaced session are evicted
-  // and unpersisted, same discipline as SparkEntry's pipeline cache.
-  private val packCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Int), (SparkSession, DataFrame, DataFrame)]
+  // "What's wrong" #1). Values are (persisted projection, packed output).
+  private val packed = new graft.SessionMemo[(String, Long, Int), (DataFrame, DataFrame)](
+    _._1.unpersist(blocking = false))
 
   /** Relative skew threshold: a bucket holding more than this many times
     * the even-spread share (n / numBuckets) marks the id space as
@@ -106,28 +105,11 @@ object TrainPrep {
   private val DefaultMaxBucketRows = 1L << 22
 
   private def packedDocs(spark: SparkSession, sfDir: String, budget: Long,
-                         numBuckets: Int): DataFrame = {
-    val key = (sfDir, budget, numBuckets)
-    packCache.get(key) match {
-      case Some((owner, _, out)) if owner eq spark => out
-      case stale =>
-        // evict a replaced session's entry; only unpersist when its context
-        // is really stopped (a live concurrent session may be mid-query on
-        // it — same discipline as SparkEntry's caches)
-        stale.foreach { case e @ (owner, cached, _) =>
-          if (packCache.remove(key, e) && owner.sparkContext.isStopped)
-            scala.util.Try(cached.unpersist(blocking = false))
-        }
-        val (cached, out, _) = buildPacked(spark, sfDir, budget, numBuckets,
-          DefaultMaxBucketRows)
-        packCache.putIfAbsent(key, (spark, cached, out)) match {
-          case Some(e @ (owner, _, winner)) if owner eq spark =>
-            cached.unpersist(blocking = false); winner
-          case Some(_) => out // other session owns the slot: use ours un-cached
-          case None => out
-        }
-    }
-  }
+                         numBuckets: Int): DataFrame =
+    packed(spark, (sfDir, budget, numBuckets)) {
+      val (cached, out, _) = buildPacked(spark, sfDir, budget, numBuckets, DefaultMaxBucketRows)
+      (cached, out)
+    }._2
 
   /** @return (the persisted tokenized projection, the packed output, the
     * EFFECTIVE bucket count after any skew rebucketing) — lazy except the

@@ -113,47 +113,68 @@ object IncrementalDedup {
     * propagates before the caller reaches its commit marker, so the
     * exactly-once replay contract is unchanged.
     *
-    * Every task runs under one shared Spark job group: when a chain fails
-    * (or exceeds the bounded await — default 120 min, env
-    * `GRAFT_CHAIN_TIMEOUT_MIN`), the group is cancelled so orphaned sibling
-    * jobs cannot keep writing `<table>/batch=<id>` partitions concurrently
-    * with a same-JVM replay of the failed batch; the error names the chain
-    * so a wedged FS call is debuggable instead of an unbounded silent hang.
-    * All tasks are awaited as Try BEFORE the first failure propagates.
+    * Every task runs under one shared Spark job group, and a call made
+    * inside a chain (the lsh and suffix chains nest their own) joins the
+    * enclosing chain's group and deadline; a top-level call mints a fresh
+    * group, never adopting the caller's own. All chains share ONE deadline
+    * — default 120 min, `-Dgraft.chainTimeoutMin` / env
+    * `GRAFT_CHAIN_TIMEOUT_MIN`, fractional minutes allowed — so the worst
+    * case is one timeout, not one per chain or nesting level. When a chain
+    * fails or the deadline passes, the top-level call cancels the group, so
+    * no orphaned job (nested ones included) keeps writing
+    * `<table>/batch=<id>` partitions concurrently with a same-JVM replay of
+    * the failed batch, and interrupts the chain threads, so a chain stuck
+    * outside Spark is woken too. The error names the chain so a wedged FS
+    * call is debuggable instead of an unbounded silent hang. All tasks are
+    * awaited as Try BEFORE the first failure propagates.
     */
   private[graft] def inParallel[A](sc: org.apache.spark.SparkContext,
       tasks: Seq[(String, () => A)]): Seq[A] = {
+    import java.util.concurrent.TimeUnit.NANOSECONDS
     import scala.util.{Failure, Try}
+    val enclosing = Option(chainContext.get)
+    val (group, deadline) = enclosing.getOrElse {
+      val timeoutMin = sys.props.get("graft.chainTimeoutMin")
+        .orElse(sys.env.get("GRAFT_CHAIN_TIMEOUT_MIN"))
+        .flatMap(_.toDoubleOption).getOrElse(120.0)
+      (s"graft-incr-${java.util.UUID.randomUUID()}",
+        System.nanoTime() + (timeoutMin * 60e9).toLong)
+    }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
-    val group = s"graft-incr-${java.util.UUID.randomUUID()}"
-    val timeoutMin = sys.props.get("graft.chainTimeoutMin")
-      .orElse(sys.env.get("GRAFT_CHAIN_TIMEOUT_MIN"))
-      .flatMap(_.toLongOption).getOrElse(120L)
     try {
       val futs = tasks.map { case (name, t) =>
         name -> pool.submit(new java.util.concurrent.Callable[Try[A]] {
           def call(): Try[A] = {
+            chainContext.set((group, deadline))
             sc.setJobGroup(group, s"incr chain $name", interruptOnCancel = true)
-            try Try(t()) finally sc.clearJobGroup()
+            try Try(t()) finally { sc.clearJobGroup(); chainContext.remove() }
           }
         })
       }
       val results = futs.map { case (name, f) =>
-        name -> (Try(f.get(timeoutMin, java.util.concurrent.TimeUnit.MINUTES)) match {
+        name -> (Try(f.get(math.max(0L, deadline - System.nanoTime()), NANOSECONDS)) match {
           case Failure(_: java.util.concurrent.TimeoutException) =>
-            Failure(new RuntimeException(
-              s"state chain '$name' still running after $timeoutMin min — wedged write?"))
+            Failure(new RuntimeException(s"state chain '$name' still running at its deadline — wedged write?"))
           case Failure(e) => Failure(e)
           case scala.util.Success(inner) => inner
         })
       }
       results.collectFirst { case (name, Failure(e)) =>
-        sc.cancelJobGroup(group) // stop still-running sibling chains first
+        // the top-level call stops every still-running chain, nested ones
+        // included; a nested call leaves that to it (cancelling the shared
+        // group here would fail the enclosing chain's siblings under their
+        // own names, hiding the chain that failed)
+        if (enclosing.isEmpty) sc.cancelJobGroup(group)
         throw new RuntimeException(s"state chain '$name' failed", e)
       }
       results.map(_._2.get)
-    } finally pool.shutdown()
+    } finally pool.shutdownNow()
   }
+
+  /** (job group, deadline as System.nanoTime) of the chain running on this
+    * thread — set only on [[inParallel]]'s own chain threads.
+    */
+  private val chainContext = new ThreadLocal[(String, Long)]
 
   private val Debug = sys.env.get("GRAFT_INCR_DEBUG").contains("1")
   private def timed[A](name: String)(f: => A): A =

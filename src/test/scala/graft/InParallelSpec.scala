@@ -46,6 +46,101 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
     } finally sys.props.remove("graft.chainTimeoutMin")
   }
 
+  /** Runs `f` with a fractional chain timeout, under the test's own bounded
+    * await so that a runner ignoring the timeout fails instead of hanging.
+    * @return the failure `inParallel` raised and the seconds it took
+    */
+  private def timedOut(timeoutMin: String)(f: => Any): (Throwable, Double) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    sys.props("graft.chainTimeoutMin") = timeoutMin
+    try {
+      val t0 = System.nanoTime()
+      val r = Await.ready(Future(f), scala.concurrent.duration.Duration(20, "s")).value.get
+      (r.failed.getOrElse(fail(s"expected a chain failure, got $r")), (System.nanoTime() - t0) / 1e9)
+    } finally sys.props.remove("graft.chainTimeoutMin")
+  }
+
+  test("one deadline: three wedged chains fail within one timeout, not three") {
+    val (e, secs) = timedOut("0.05") { // 3 s
+      IncrementalDedup.inParallel[Long](spark.sparkContext,
+        (1 to 3).map(i => s"wedged-$i" -> (() => { Thread.sleep(15000); 0L })))
+    }
+    assert(e.getMessage.contains("wedged-1"), e.getMessage)
+    assert(secs < 6.0, s"3 wedged chains took $secs s against a 3 s timeout")
+  }
+
+  test("a chain stuck outside Spark is interrupted once the call fails") {
+    val interrupted = new java.util.concurrent.CountDownLatch(1)
+    timedOut("0.05") {
+      IncrementalDedup.inParallel[Long](spark.sparkContext, Seq("sleeper" -> (() => {
+        try Thread.sleep(15000)
+        catch { case _: InterruptedException => interrupted.countDown() }
+        0L
+      })))
+    }
+    assert(interrupted.await(5, java.util.concurrent.TimeUnit.SECONDS),
+      "the wedged chain thread was never interrupted")
+  }
+
+  test("a nested chain joins the enclosing chain's job group: the outer timeout cancels its job") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentHashMap[String, String]
+    @volatile var innerJob = -1
+    val innerEnded = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = e.properties.getProperty("spark.job.description", "")
+        if (desc.startsWith("incr chain nest-"))
+          groups.put(desc, e.properties.getProperty("spark.jobGroup.id", ""))
+        if (desc == "incr chain nest-inner") innerJob = e.jobId
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == innerJob) innerEnded.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      timedOut("0.05") {
+        IncrementalDedup.inParallel[Long](sc, Seq("nest-outer" -> (() => {
+          sc.parallelize(1 to 4, 1).count()
+          IncrementalDedup.inParallel[Long](sc, Seq("nest-inner" -> (() =>
+            sc.parallelize(1 to 1, 1).map { x => Thread.sleep(15000); x.toLong }.count()))).head
+        })))
+      }
+      assert(innerEnded.await(5, java.util.concurrent.TimeUnit.SECONDS),
+        "the nested chain's job was still running after the outer call timed out")
+      assert(groups.get("incr chain nest-inner") == groups.get("incr chain nest-outer"),
+        s"nested chain ran under its own group: $groups")
+    } finally {
+      if (innerJob >= 0) sc.cancelJob(innerJob)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a top-level call mints its own group and leaves the caller's group alone") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    @volatile var group = ""
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description", "") == "incr chain own")
+          group = e.properties.getProperty("spark.jobGroup.id", "")
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("caller-span", "caller")
+    try {
+      IncrementalDedup.inParallel[Long](sc, Seq("own" -> (() => sc.parallelize(1 to 4, 1).count())))
+      val until = System.nanoTime() + 5000000000L // listener events are async
+      while (group.isEmpty && System.nanoTime() < until) Thread.sleep(20)
+      assert(group.startsWith("graft-incr-"), group)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-span")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("success path returns results in task order") {
     val r = IncrementalDedup.inParallel[Int](spark.sparkContext, Seq(
       "a" -> (() => 1), "b" -> (() => 2), "c" -> (() => 3)))

@@ -95,6 +95,40 @@ class TrainPrepSpec extends AnyFunSuite with SparkTestBase {
       "rebucketed assignment differs from the global-window reference")
   }
 
+  private def persisted: Int = spark.sparkContext.getPersistentRDDs.size
+
+  /** A small corpus of its own: a distinct input, so a distinct cached plan. */
+  private def tinyCorpus(tag: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-pack-$tag").toString
+    spark.createDataFrame((0 until 40).map(i => (i.toLong, s"w$tag t$i " * (1 + i % 5), "en")))
+      .toDF("doc_id", "text", "lang")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("packShards memo is bounded: 6 inputs in one session leave at most 4 persisted projections") {
+    val dirs = (1 to 6).map(tinyCorpus)
+    val before = persisted
+    dirs.zipWithIndex.foreach { case (dir, i) =>
+      assert(TrainPrep.packShards(spark, dir, budget = 50L + i).count() == 40)
+    }
+    assert(persisted - before <= graft.SessionMemo.Capacity,
+      s"${persisted - before} persisted projections after 6 inputs")
+  }
+
+  test("packShards memo across sessions: 6 fresh sessions leave at most 4 persisted projections") {
+    val dirs = (1 to 6).map(i => tinyCorpus(10 + i))
+    val before = persisted
+    val shared = TrainPrep.packShards(spark, d).collect().toSeq
+    dirs.foreach { dir =>
+      val s = spark.newSession()
+      assert(TrainPrep.packShards(s, d).collect().toSeq == shared)
+      assert(TrainPrep.packShards(s, dir).count() == 40)
+    }
+    assert(persisted - before <= graft.SessionMemo.Capacity,
+      s"${persisted - before} persisted projections after 6 sessions")
+  }
+
   test("stratifiedSample pre-filter: exact on skewed groups, loud fallback when starved") {
     // planted skewed corpus: group sizes 3 / 60 / 600
     val dir = java.nio.file.Files.createTempDirectory("graft-strat").toString
