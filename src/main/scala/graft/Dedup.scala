@@ -24,6 +24,14 @@ import graft.io.{ParquetCatalog, StageMeta}
   * fingerprint recorded in stage_meta equals the fingerprint recomputed
   * from (config, upstream chain, input identity). Changing the config or
   * the input invalidates exactly the affected suffix of the stage graph.
+  * stage_meta is read once per run, at start, into a driver map of each
+  * stage's newest fingerprint: every stage is looked up before its own
+  * lineage row is written, so the start-of-run snapshot answers each
+  * lookup as a per-stage read would. Each computed stage still appends its
+  * lineage row as soon as it is written, so a kill leaves every finished
+  * stage resumable. Read-backs take their schema from the written footer
+  * ([[graft.io.ParquetCatalog.readParquet]]): resuming a completed work
+  * dir runs one Spark job, the stage_meta read.
   */
 object Dedup {
 
@@ -60,6 +68,7 @@ object Dedup {
       stopAfter: String = ""): StagedResult = {
 
     val cat = new ParquetCatalog(workDir)
+    val recorded = StageMeta.lastFingerprints(spark, cat)
     val computed = scala.collection.mutable.ArrayBuffer.empty[String]
     var chainFp = Hashing.xxString(cfg.fingerprint + "|" + inputId, Hashing.DefaultSeed).toHexString
 
@@ -80,8 +89,7 @@ object Dedup {
       /** Compute-or-reuse one stage; returns the stage read back from disk. */
       def stage(name: String)(build: => DataFrame): DataFrame = {
         chainFp = Hashing.xxString(chainFp + "|" + name, Hashing.DefaultSeed).toHexString
-        val reusable = cat.exists(spark, name) &&
-          StageMeta.lastFingerprint(spark, cat, name).contains(chainFp)
+        val reusable = cat.exists(spark, name) && recorded.get(name).contains(chainFp)
         if (!reusable) {
           val t0 = System.nanoTime()
           write(name, build, (System.nanoTime() - t0) / 1000000)

@@ -81,13 +81,20 @@ object TrainPrep {
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("sum_tokens"))
       .orderBy("shard_id")
 
-  // One packed projection per (session, input, budget, numBuckets): the
-  // tokenized scan feeds THREE jobs (min/max agg, per-bucket offsets, the
-  // final windowed join) plus shardStats' rollup — without the persist each
+  // One persisted tokenized projection per (session, input): it feeds THREE
+  // jobs of every packing (min/max agg, per-bucket offsets, the final
+  // windowed join) plus shardStats' rollup — without the persist each
   // consumer re-ran the full corpus scan + tokenize (round-5 verdict
-  // "What's wrong" #1). Values are (persisted projection, packed output).
-  private val packed = new graft.SessionMemo[(String, Long, Int), (DataFrame, DataFrame)](
-    _._1.unpersist(blocking = false))
+  // "What's wrong" #1). Keyed by input alone: every budget and bucket count
+  // packs the same plan, and unpersist releases by plan, so one cache entry
+  // has exactly one memo entry that may release it.
+  private val projections = new graft.SessionMemo[String, DataFrame](
+    _.unpersist(blocking = false))
+
+  // Packed outputs per (session, input, budget, numBuckets) — plans over the
+  // shared projection plus its two collected driver aggregates. They hold
+  // no cache of their own, so evicting one releases nothing.
+  private val packed = new graft.SessionMemo[(String, Long, Int), DataFrame](_ => ())
 
   /** Relative skew threshold: a bucket holding more than this many times
     * the even-spread share (n / numBuckets) marks the id space as
@@ -107,22 +114,25 @@ object TrainPrep {
   private def packedDocs(spark: SparkSession, sfDir: String, budget: Long,
                          numBuckets: Int): DataFrame =
     packed(spark, (sfDir, budget, numBuckets)) {
-      val (cached, out, _) = buildPacked(spark, sfDir, budget, numBuckets, DefaultMaxBucketRows)
-      (cached, out)
-    }._2
+      buildPacked(spark, sfDir, budget, numBuckets, DefaultMaxBucketRows)._2
+    }
 
   /** @return (the persisted tokenized projection, the packed output, the
     * EFFECTIVE bucket count after any skew rebucketing) — lazy except the
-    * two tiny driver aggregations (min/max + offsets).
+    * two tiny driver aggregations (min/max + offsets). The projection is
+    * the session's shared one for `sfDir`: unpersisting it drops the cache
+    * under every packing of that input.
     */
   private[graft] def buildPacked(spark: SparkSession, sfDir: String, budget: Long,
                           numBuckets: Int, maxBucketRows: Long,
                           round: Int = 0): (DataFrame, DataFrame, Int) = {
     require(budget > 0 && numBuckets > 0)
-    val d = docs(spark, sfDir).select(
-      col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
-      .persist()
+    val d = projections(spark, sfDir) {
+      docs(spark, sfDir).select(
+        col("doc_id"),
+        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
+        .persist()
+    }
     val Array(minId, maxId) =
       d.agg(min("doc_id"), max("doc_id")).collect()(0).toSeq.toArray
         .map(v => if (v == null) 0L else v.asInstanceOf[Long])
@@ -158,10 +168,8 @@ object TrainPrep {
     if (skewed && round < 3) {
       val factor = math.max(2L, 2L * (maxRows / math.max(1L, maxBucketRows)))
       val finer = math.min(1L << 16, numBuckets.toLong * factor).toInt
-      if (finer > numBuckets) {
-        d.unpersist(blocking = false)
+      if (finer > numBuckets)
         return buildPacked(spark, sfDir, budget, finer, maxBucketRows, round + 1)
-      }
     }
     if (skewed)
       org.slf4j.LoggerFactory.getLogger(getClass)

@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-stage lineage + metrics (SURVEY.md §1.2 T9): one row per output
@@ -9,6 +9,9 @@ import org.apache.spark.sql.functions._
   * stage was computed from. Powers exact resume: a stage is reusable iff
   * it is complete (_SUCCESS) AND its recorded fingerprint equals the
   * fingerprint recomputed from the current upstream chain + config.
+  *
+  * The table is read with its declared [[MetaRow]] schema (no inference
+  * job), and a staged run reads it once, at start ([[lastFingerprints]]).
   */
 object StageMeta {
 
@@ -50,7 +53,7 @@ object StageMeta {
     val files = fs.listStatus(p).filter(f => f.getPath.getName.endsWith(".parquet"))
     val perFile: Map[String, Long] =
       if (files.isEmpty || totalRows >= 0) Map.empty
-      else spark.read.parquet(loc)
+      else ParquetCatalog.readParquet(spark, loc)
         .groupBy(input_file_name().as("partition_file"))
         .agg(count(lit(1)).as("rows"))
         .as[(String, Long)].collect().toMap
@@ -78,23 +81,25 @@ object StageMeta {
     metaDf.write.mode("append").parquet(s"${catalog.location(StageMetaDir)}")
   }
 
+  private val MetaSchema = Encoders.product[MetaRow].schema
+
   def read(spark: SparkSession, catalog: ParquetCatalog): DataFrame =
-    spark.read.parquet(catalog.location(StageMetaDir))
+    spark.read.schema(MetaSchema).parquet(catalog.location(StageMetaDir))
       // workdirs written before the Option[rows] convention carry -1
       // sentinels for "per-file split unknown"; normalize so naive
       // sum(rows)-per-stage consumers stay correct on resumed legacy dirs
       .withColumn("rows", when(col("rows") === -1L, lit(null)).otherwise(col("rows")))
 
-  /** Latest recorded fingerprint for a stage, if any. */
-  def lastFingerprint(spark: SparkSession, catalog: ParquetCatalog, stage: String): Option[String] = {
+  /** Newest recorded fingerprint per stage, in one Spark job (none when no
+    * stage_meta exists). The lineage rows are few — one per part file per
+    * computed stage — so they are reduced on the driver rather than through
+    * a shuffle.
+    */
+  def lastFingerprints(spark: SparkSession, catalog: ParquetCatalog): Map[String, String] = {
     val p = new Path(catalog.location(StageMetaDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val rows = read(spark, catalog)
-      .where(col("stage") === stage)
-      .orderBy(col("ts").desc)
-      .select("input_fingerprint")
-      .limit(1).collect()
-    rows.headOption.map(_.getString(0))
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Map.empty
+    else read(spark, catalog).select("stage", "input_fingerprint", "ts").collect()
+      .groupBy(_.getString(0))
+      .map { case (stage, rows) => stage -> rows.maxBy(_.getTimestamp(2).getTime).getString(1) }
   }
 }

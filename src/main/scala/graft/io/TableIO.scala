@@ -1,7 +1,12 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Stage-table storage behind a thin trait (SURVEY.md §2 rows 1–2).
   *
@@ -21,6 +26,8 @@ trait TableCatalog {
 /** Local/posix implementation over a root directory, one subdir per stage.
   * Parquet + overwrite gives the checkpoint/replace semantics; `_SUCCESS`
   * marks completeness (a killed write leaves no marker → stage recomputes).
+  * Reads go through [[ParquetCatalog.readParquet]], so a read-back costs no
+  * Spark job.
   */
 final class ParquetCatalog(root: String) extends TableCatalog {
   override def location(stage: String): String = s"$root/$stage"
@@ -32,12 +39,72 @@ final class ParquetCatalog(root: String) extends TableCatalog {
   }
 
   override def read(spark: SparkSession, stage: String): DataFrame =
-    spark.read.parquet(location(stage))
+    ParquetCatalog.readParquet(spark, location(stage))
 
   override def exists(spark: SparkSession, stage: String): Boolean = {
     val p = new Path(location(stage), "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+}
+
+object ParquetCatalog {
+
+  /** Footer key under which Spark stores the row schema (as JSON) in every
+    * parquet file it writes.
+    */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** `spark.read.parquet(path)` without its schema-inference job.
+    *
+    * Plain `spark.read.parquet` infers the schema by reading a footer in a
+    * Spark job, and a staged resume paid one such job per stage read-back.
+    * Every engine-written table already carries its Spark schema in
+    * each file's footer, so this reads that footer on the driver from one
+    * data file and passes it as the read schema: same columns, same
+    * partition-column discovery (`batch=<id>` directories), no job.
+    *
+    * Data files are found the way Spark lists them: names starting with
+    * `_` or `.` (`_SUCCESS`, `_temporary/`, checksum files) are skipped.
+    * When no data file or no Spark schema key is found, this is plain
+    * `spark.read.parquet(path)`, so an empty or missing table raises the
+    * error Spark raises.
+    *
+    * @param footerFrom directories to take the footer from, first one with
+    *        a data file wins; empty means `path` itself. A reader that
+    *        restricts its rows to some partitions passes those, so the
+    *        schema never comes from a file the read excludes.
+    */
+  def readParquet(spark: SparkSession, path: String, footerFrom: Seq[String] = Nil): DataFrame =
+    (if (footerFrom.isEmpty) Seq(path) else footerFrom).iterator
+      .flatMap(footerSchema(spark, _)).nextOption() match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    // an unreadable footer (empty or foreign file) falls back to inference,
+    // which reports it the way Spark does
+    Try {
+      firstDataFile(fs, p).flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+        finally reader.close()
+      }.map(DataType.fromJson(_).asInstanceOf[StructType])
+    }.toOption.flatten
+  }
+
+  private def firstDataFile(fs: FileSystem, p: Path): Option[FileStatus] =
+    if (!fs.exists(p)) None
+    else {
+      val (dirs, files) = fs.listStatus(p)
+        .filterNot { s => val n = s.getPath.getName; n.startsWith("_") || n.startsWith(".") }
+        .sortBy(_.getPath.getName)
+        .partition(_.isDirectory)
+      files.headOption.orElse(dirs.iterator.flatMap(d => firstDataFile(fs, d.getPath)).nextOption())
+    }
 }
 
 /** Documented production implementation: Iceberg tables under a configured

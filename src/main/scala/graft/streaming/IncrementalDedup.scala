@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.DedupPipeline
 import graft.conf.DedupConfig
+import graft.io.ParquetCatalog.readParquet
 
 /** Incremental / streaming dedup (SURVEY.md §2.8).
   *
@@ -252,6 +253,8 @@ object IncrementalDedup {
     * leftovers: trusting it during replay would make the re-ingest
     * anti-join see the batch's own docs, compute an empty "fresh" set and
     * overwrite the partitions with empty data — silently losing the batch.
+    * For the same reason the read schema comes from the footer of a file in
+    * one of the partitions read, never from an uncommitted one.
     */
   private def readState(spark: SparkSession, stateDir: String, name: String,
       committed: Seq[Long], alsoBatch: Long = -1L): Option[DataFrame] = {
@@ -260,7 +263,8 @@ object IncrementalDedup {
     else {
       val ids = committed ++ (if (alsoBatch >= 0) Seq(alsoBatch) else Nil)
       if (ids.isEmpty) None
-      else Some(spark.read.parquet(p.toString).where(col("batch").isin(ids: _*)))
+      else Some(readParquet(spark, p.toString, ids.map(id => s"$p/batch=$id"))
+        .where(col("batch").isin(ids: _*)))
     }
   }
 
@@ -389,8 +393,8 @@ object IncrementalDedup {
 
     val newPairCount =
       if (!collectStats) -1L
-      else spark.read.parquet(s"$stateDir/lsh_pairs/batch=$id").select("a", "b")
-        .unionByName(spark.read.parquet(s"$stateDir/exact_pairs/batch=$id"))
+      else readParquet(spark, s"$stateDir/lsh_pairs/batch=$id").select("a", "b")
+        .unionByName(readParquet(spark, s"$stateDir/exact_pairs/batch=$id"))
         .distinct().count()
 
     commit(spark, stateDir, id)
@@ -443,7 +447,7 @@ object IncrementalDedup {
         .write.mode("overwrite").parquet(s"$stateDir/signatures/batch=$id"))),
       "bands.write" -> (() => timed("bands.write")(bandsNew
         .write.mode("overwrite").parquet(s"$stateDir/bands/batch=$id")))))
-    val bandsNewD = spark.read.parquet(s"$stateDir/bands/batch=$id")
+    val bandsNewD = readParquet(spark, s"$stateDir/bands/batch=$id")
     val bcNew = bandsNewD.groupBy("band", "band_hash").agg(count(lit(1)).as("cnt"))
 
     inParallel(spark.sparkContext, Seq[(String, () => Unit)](
@@ -603,7 +607,7 @@ object IncrementalDedup {
         .write.mode("overwrite").parquet(s"$stateDir/toks/batch=$id")); 0L }),
       "grams.write" -> (() => timed("grams.write")(
         writeCounted(gramsNew, s"$stateDir/grams/batch=$id")))))(1)
-    val gramsNewD = spark.read.parquet(s"$stateDir/grams/batch=$id")
+    val gramsNewD = readParquet(spark, s"$stateDir/grams/batch=$id")
     // grams() emits distinct fps per doc, so count(*) = docs-per-gram
     val gcNew = gramsNewD.groupBy("fp").agg(count(lit(1)).as("cnt"))
 
@@ -665,7 +669,7 @@ object IncrementalDedup {
           .write.mode("overwrite").parquet(s"$stateDir/sfx_pairs/batch=$id"))
         prov.unpersist(blocking = false)
         if (!collectStats) -1L
-        else spark.read.parquet(s"$stateDir/sfx_pairs/batch=$id")
+        else readParquet(spark, s"$stateDir/sfx_pairs/batch=$id")
           .select("a", "b").distinct().count()
       })))(1)
   }

@@ -1,9 +1,17 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{coalesce, lit}
+import org.apache.spark.sql.types.StructType
 
 import graft.conf.DedupConfig
 import graft.testutil.FixtureGen
@@ -12,7 +20,8 @@ import graft.testutil.FixtureGen
   *  - a second run over unchanged input recomputes nothing;
   *  - a run killed mid-pipeline resumes from the last complete stage and
   *    produces output identical to an uninterrupted run;
-  *  - a config change invalidates everything.
+  *  - a config change invalidates everything;
+  *  - resume bookkeeping costs no per-stage Spark jobs.
   */
 class ResumeSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -124,5 +133,61 @@ class ResumeSpec extends AnyFunSuite with SparkTestBase {
     assert(sigBytes > 0)
     val stages = meta.select("stage").distinct().as[String].collect().toSet
     assert(stages.contains("clusters") && stages.contains("candidate_pairs"))
+  }
+
+  /** (result, Spark jobs, SQL executions scanning `dir`'s stage_meta) of `f`. */
+  private def counted[A](dir: String)(f: => A): (A, Int, Int) = {
+    val jobs = new AtomicInteger()
+    val metaReads = new AtomicInteger()
+    def scansMeta(i: SparkPlanInfo): Boolean =
+      i.metadata.get("Location").exists(_.contains(s"$dir/${io.StageMeta.StageMetaDir}")) ||
+        i.children.exists(scansMeta)
+    val out = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if scansMeta(s.sparkPlanInfo) =>
+          metaReads.incrementAndGet(): Unit
+        case _ => ()
+      }
+    })(f)
+    (out, jobs.get, metaReads.get)
+  }
+
+  test("resuming a completed dir runs at most 2 Spark jobs; a run reads stage_meta at most once") {
+    val dir = freshDir()
+    val (first, _, freshReads) = counted(dir)(Dedup.run(spark, corpus, dir, cfg, inputId = "fixture400"))
+    assert(first.computed.size === 8)
+    assert(freshReads <= 1, s"a fresh run scanned stage_meta $freshReads times")
+    val (second, jobs, resumeReads) =
+      counted(dir)(Dedup.run(spark, corpus, dir, cfg, inputId = "fixture400"))
+    assert(second.computed.isEmpty, s"recomputed: ${second.computed}")
+    assert(jobs <= 2, s"resume of a completed dir ran $jobs Spark jobs")
+    assert(resumeReads <= 1, s"the resume scanned stage_meta $resumeReads times")
+  }
+
+  test("a legacy work dir (non-null rows with -1 sentinels) resumes with nothing computed") {
+    val dir = freshDir()
+    val first = Dedup.run(spark, corpus, dir, cfg, inputId = "fixture400")
+    // rewrite stage_meta the way work dirs written before the Option[rows]
+    // convention hold it: a non-nullable rows column, -1 = split unknown
+    val loc = new io.ParquetCatalog(dir).location(io.StageMeta.StageMetaDir)
+    val current = spark.read.parquet(loc)
+    val legacySchema = StructType(current.schema.map { f =>
+      if (f.name == "rows") f.copy(nullable = false) else f
+    })
+    val legacyRows = current.withColumn("rows", coalesce($"rows", lit(-1L))).collect().toSeq
+    val p = new Path(loc)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    spark.createDataFrame(legacyRows.asJava, legacySchema).write.parquet(loc)
+    assert(spark.read.parquet(loc).where($"rows" === -1L).count() > 0, "no legacy sentinel written")
+
+    val resumed = Dedup.run(spark, corpus, dir, cfg, inputId = "fixture400")
+    assert(resumed.computed.isEmpty, s"legacy dir recomputed: ${resumed.computed}")
+    assert(resumed.clusters.as[(Long, Long)].collect().toMap ===
+      first.clusters.as[(Long, Long)].collect().toMap)
+    // the declared-schema read still normalizes the sentinels away
+    val meta = io.StageMeta.read(spark, new io.ParquetCatalog(dir))
+    assert(meta.where($"rows" === -1L).count() === 0)
+    assert(meta.where($"rows".isNull).count() > 0)
   }
 }

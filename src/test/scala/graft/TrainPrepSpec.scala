@@ -129,6 +129,23 @@ class TrainPrepSpec extends AnyFunSuite with SparkTestBase {
       s"${persisted - before} persisted projections after 6 sessions")
   }
 
+  test("packShards memo: evicting one budget of an input keeps the projection its other budgets use") {
+    val x = tinyCorpus(30)
+    val others = (31 to 33).map(tinyCorpus)
+    // the tokenized projection every packing of `x` shares; the cache is
+    // matched by plan, so this handle reports the cache the memo holds
+    val projection = spark.read.parquet(s"$x/documents.parquet").select(
+      col("doc_id"), size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
+    def pack(dir: String, budget: Long): Unit =
+      assert(TrainPrep.packShards(spark, dir, budget).count() == 40)
+    pack(x, 50L); pack(x, 60L)
+    pack(others(0), 50L); pack(others(1), 50L)
+    pack(x, 60L) // x at 60 is now the most recently used, x at 50 the eldest
+    pack(others(2), 50L) // one more key past the bound evicts x at 50 only
+    assert(projection.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "evicting one budget of an input uncached the projection its live budget packs from")
+  }
+
   test("stratifiedSample pre-filter: exact on skewed groups, loud fallback when starved") {
     // planted skewed corpus: group sizes 3 / 60 / 600
     val dir = java.nio.file.Files.createTempDirectory("graft-strat").toString
