@@ -1,8 +1,11 @@
 package graft.model
 
-/** Row models for the pipeline stage tables (SURVEY.md §1.2 T0–T9), as
-  * top-level case classes so Catalyst serializer/deserializer codegen never
-  * needs an outer instance. Arrays are Array[Long] (ArrayType(LongType)).
+/** Row models for the stage tables a typed kernel reads or writes
+  * (SURVEY.md §1.2 T0–T9), as top-level case classes so Catalyst
+  * serializer/deserializer codegen never needs an outer instance. Arrays
+  * are Array[Long] (ArrayType(LongType)). Band, pair and count tables (the
+  * batch stages and the incremental keyed indexes alike) are untyped
+  * DataFrames and have no model here.
   */
 
 /** T0 — canonical input (BASELINE.json input_hint). */
@@ -23,24 +26,6 @@ final case class Signature(
     simhash: Long,
     n_shingles: Int)
 
-/** T4 — one row per (doc, band); band ids 0..bands-1 are MinHash bands,
-  * bands..bands+simhashBlocks-1 are SimHash blocks.
-  */
-final case class BandRow(doc_id: Long, band: Int, band_hash: Long)
-
-/** Candidate pair with its emitting bucket key — the provenance that lets a
-  * read-time filter apply the stop-band rule retroactively (streaming
-  * emission cannot be taken back; see StreamingLsh.retroLive /
-  * IncrementalDedup.liveLshPairs).
-  */
-final case class ProvPair(a: Long, b: Long, src: String, band: Int, band_hash: Long)
-
 /** Suffix-pass tokens: ordered (non-distinct) token hashes per doc. */
 final case class TokenDoc(doc_id: Long, tokens: Array[Long])
-
-/** Per-(band, band_hash) streaming-LSH state: doc ids seen in the bucket;
-  * `stopped` buckets crossed the stop cap and emit nothing further (the
-  * streaming analogue of batch stop-bands — state is dropped, not grown).
-  */
-final case class BucketState(docs: Array[Long], stopped: Boolean)
 

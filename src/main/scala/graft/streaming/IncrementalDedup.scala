@@ -45,7 +45,7 @@ import graft.io.ParquetCatalog.readParquet
   * per-batch O(corpus) shuffle into a scan+filter (no exchange of the
   * accumulated side; per-batch shuffle volume is ∝ batch + matches,
   * asserted sublinear by StreamingSpec). The key side is broadcast only
-  * while provably small ([[semiPrune]]): gram fingerprints scale with token
+  * while provably small ([[prune]]): gram fingerprints scale with token
   * count (~10^8 distinct for a 50k-doc batch), and an unconditional
   * broadcast() hint bypasses every driver-memory safety.
   *
@@ -65,10 +65,15 @@ import graft.io.ParquetCatalog.readParquet
   * a stream must not grow unbounded candidate emission); the read-time
   * filter is the semantics.
   *
-  * The suffix/containment pass ([[suffixIncrement]]) is the same design one
-  * level down: per-rep token/gram state, candidates under the running gram
-  * df-cap, verified pairs appended with anchor-gram provenance
-  * (`sfx_pairs/batch=<id>`), final-df filtering at read time.
+  * The suffix/containment pass is the same design over another key space:
+  * per-rep token/gram state, candidates under the running gram df-cap,
+  * verified pairs appended with anchor-gram provenance
+  * (`sfx_pairs/batch=<id>`), final-df filtering at read time. Both are
+  * [[KeyedIndex]] instances ([[Lsh]], [[Suffix]]) run by ONE
+  * [[increment]] and read by ONE [[livePairsOf]]: per-batch key counts are
+  * partition aggregates merged by an associative sum, so one algebra serves
+  * both key spaces, and only the head (reps → rows + key rows) and the
+  * verify step differ.
   *
   * Exact-duplicate edges are linear, not pairwise: each batch appends a
   * within-batch star (batch-min doc per sha → its batch members) plus one
@@ -92,17 +97,13 @@ object IncrementalDedup {
     */
   private val BroadcastKeyCap = 2000000L
 
-  private def semiPrune(state: DataFrame, keys: DataFrame, keyCols: Seq[String],
-      keyRowsUpperBound: Long): DataFrame =
-    if (keyRowsUpperBound <= BroadcastKeyCap)
-      state.join(broadcast(keys), keyCols, "left_semi")
-    else state.join(keys, keyCols, "left_semi")
-
-  private def antiPrune(state: DataFrame, keys: DataFrame, keyCols: Seq[String],
-      keyRowsUpperBound: Long): DataFrame =
-    if (keyRowsUpperBound <= BroadcastKeyCap)
-      state.join(broadcast(keys), keyCols, "left_anti")
-    else state.join(keys, keyCols, "left_anti")
+  /** `state` semi- or anti-joined (`how`) against `keys` on `keyCols`,
+    * broadcasting the key side only while `keyRowsUpperBound` keeps it
+    * under [[BroadcastKeyCap]].
+    */
+  private def prune(state: DataFrame, keys: DataFrame, keyCols: Seq[String],
+      keyRowsUpperBound: Long, how: String): DataFrame =
+    state.join(if (keyRowsUpperBound <= BroadcastKeyCap) broadcast(keys) else keys, keyCols, how)
 
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -312,84 +313,89 @@ object IncrementalDedup {
     val docsOld = readState(spark, stateDir, "docs", done)
       .map(_.select("doc_id", "content_sha256"))
 
-    // genuinely-new docs only: replay/re-ingest of a known doc_id must not
-    // duplicate state rows. Both anti-joins below are phrased as "prune the
-    // O(corpus) accumulated side down to the batch's hits first" — the
-    // accumulated side is never the broadcast candidate and never enters an
-    // exchange (scan+filter), same discipline as the band-probe prune.
-    // t1New is PERSISTED rather than round-tripped through a scratch parquet
-    // table (an earlier design wrote + re-read `incoming_t1` every batch —
-    // two extra jobs on the fixed per-batch floor for the same
-    // materialize-once effect the cache gives).
-    val t1Raw = graft.ingest.Ingest.ingest(corpusBatch)
-      .select("doc_id", "repo", "lang", "content_sha256", "content")
-      .dropDuplicates("doc_id")
-      .persist()
-    // nRaw is the ONE count that must exist before any prune plan is built:
-    // it upper-bounds every broadcast-vs-shuffle decision below (nNew ≤
-    // nRaw, and a bound only gates broadcastability — using the looser raw
-    // count never changes emitted rows, it can only fall back to a shuffle
-    // semi-join sooner). Counting t1Raw unconditionally (the first batch
-    // included) also materializes the cache every chain reads.
-    val nRaw = timed("nRaw.count")(t1Raw.count())
-    val t1New = docsOld match {
-      case Some(old) =>
-        val oldIdHit = semiPrune(old.select("doc_id"),
-          t1Raw.select("doc_id"), Seq("doc_id"), nRaw)
-        antiPrune(t1Raw, oldIdHit, Seq("doc_id"), nRaw).persist()
-      case None => t1Raw
-    }
+    // every frame the batch persists, released however the batch ends: a
+    // failed batch (chain error, deadline, a bad row) must not leave its
+    // plans cached in the session, one more set per retry
+    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def persisted(df: DataFrame): DataFrame = { cached += df.persist(); df }
+    val (nNew, newSfxPairs) = try {
+      // genuinely-new docs only: replay/re-ingest of a known doc_id must not
+      // duplicate state rows. Both anti-joins below are phrased as "prune
+      // the O(corpus) accumulated side down to the batch's hits first" — the
+      // accumulated side is never the broadcast candidate and never enters
+      // an exchange (scan+filter), same discipline as the key-probe prune.
+      // t1New is PERSISTED rather than round-tripped through a scratch
+      // parquet table (an earlier design wrote + re-read `incoming_t1` every
+      // batch — two extra jobs on the fixed per-batch floor for the same
+      // materialize-once effect the cache gives).
+      val t1Raw = persisted(graft.ingest.Ingest.ingest(corpusBatch)
+        .select("doc_id", "repo", "lang", "content_sha256", "content")
+        .dropDuplicates("doc_id"))
+      // nRaw is counted before any doc-level prune plan is built: it
+      // upper-bounds the doc_id/sha broadcast-vs-shuffle decisions (nNew ≤
+      // nRaw, and a bound only gates broadcastability — the looser raw count
+      // never changes emitted rows, it can only fall back to a shuffle
+      // semi-join sooner); the key-level prunes take theirs from the key
+      // write's observation. Counting t1Raw unconditionally (the first batch
+      // included) also materializes the cache every chain reads.
+      val nRaw = timed("nRaw.count")(t1Raw.count())
+      val t1New = docsOld match {
+        case Some(old) =>
+          val oldIdHit = prune(old.select("doc_id"),
+            t1Raw.select("doc_id"), Seq("doc_id"), nRaw, "left_semi")
+          persisted(prune(t1Raw, oldIdHit, Seq("doc_id"), nRaw, "left_anti"))
+        case None => t1Raw
+      }
 
-    // the write materializes the t1New cache (its attached observation is
-    // the batch's exact doc count, recorded in lineage); running it BEFORE
-    // the concurrent chains keeps their first actions from racing to
-    // compute t1New's prune subtree 3–4× in parallel — duplicated upstream
-    // shuffle reads that the flat-shuffle guarantee (StreamingSpec) counts
-    val nNew = timed("docs.write")(writeCounted(t1New.select("doc_id", "content_sha256"),
-      s"$stateDir/docs/batch=$id"))
+      // the write materializes the t1New cache (its attached observation is
+      // the batch's exact doc count, recorded in lineage); running it BEFORE
+      // the concurrent chains keeps their first actions from racing to
+      // compute t1New's prune subtree 3–4× in parallel — duplicated upstream
+      // shuffle reads that the flat-shuffle guarantee (StreamingSpec) counts
+      val nNew = timed("docs.write")(writeCounted(t1New.select("doc_id", "content_sha256"),
+        s"$stateDir/docs/batch=$id"))
 
-    // First carrier per previously-unseen sha (min doc_id within the batch)
-    // — the only docs that enter LSH/suffix state. Docs whose sha is already
-    // known contribute exact-star edges only, exactly like the batch
-    // pipeline's members.
-    val newShaDocs = docsOld match {
-      case Some(old) =>
-        val oldShaHit = semiPrune(old.select("content_sha256"),
-          t1New.select("content_sha256").distinct(), Seq("content_sha256"), nRaw)
-          .distinct()
-        antiPrune(t1New, oldShaHit, Seq("content_sha256"), nRaw)
-      case None => t1New
-    }
-    // persisted: the LSH chain (signatures) and the suffix chain (tokens)
-    // both start from the reps — without the cache each chain re-runs the
-    // sha-group shuffle. The chains race to materialize it; a partition
-    // computed twice is cached once (Spark cache semantics), which costs at
-    // most what the uncached design always paid.
-    val repsNew = newShaDocs.join(
-      newShaDocs.groupBy("content_sha256").agg(min("doc_id").as("doc_id")),
-      Seq("content_sha256", "doc_id"))
-      .persist()
-    // materialize ONCE before the chains fork: the four chain-head jobs
-    // (signature/band/token/gram writes) all read repsNew, and cold racers
-    // would each re-run its sha-group shuffle (the duplicated shuffle reads
-    // would also be charged against StreamingSpec's flat-shuffle budget)
-    timed("reps.count")(repsNew.count()): Unit
+      // First carrier per previously-unseen sha (min doc_id within the
+      // batch) — the only docs that enter LSH/suffix state. Docs whose sha
+      // is already known contribute exact-star edges only, exactly like the
+      // batch pipeline's members.
+      val newShaDocs = docsOld match {
+        case Some(old) =>
+          val oldShaHit = prune(old.select("content_sha256"),
+            t1New.select("content_sha256").distinct(), Seq("content_sha256"), nRaw, "left_semi")
+            .distinct()
+          prune(t1New, oldShaHit, Seq("content_sha256"), nRaw, "left_anti")
+        case None => t1New
+      }
+      // persisted: both keyed indexes start from the reps — without the
+      // cache each chain re-runs the sha-group shuffle
+      val repsNew = persisted(newShaDocs.join(
+        newShaDocs.groupBy("content_sha256").agg(min("doc_id").as("doc_id")),
+        Seq("content_sha256", "doc_id")))
+      // materialize ONCE before the chains fork: the four chain-head jobs
+      // (signature/band/token/gram writes) all read repsNew, and cold racers
+      // would each re-run its sha-group shuffle (the duplicated shuffle
+      // reads would also be charged against StreamingSpec's flat-shuffle
+      // budget)
+      timed("reps.count")(repsNew.count()): Unit
 
-    // The three state-building chains are INDEPENDENT until the commit
-    // marker (disjoint tables: signatures/bands/band_counts/lsh_pairs vs
-    // toks/grams/gram_counts/sfx_pairs vs exact_pairs) — run them
-    // concurrently so their fixed per-job costs overlap (the measured
-    // 8–10 s/batch floor was ~17 SEQUENTIAL driver-coordinated jobs).
-    val results = inParallel(spark.sparkContext, Seq[(String, () => Long)](
-      "lsh" -> (() => { lshIncrement(spark, stateDir, repsNew, done, id, nRaw, cfg); 0L }),
-      "suffix" -> (() => suffixIncrement(spark, stateDir, repsNew, done, id, cfg, collectStats)),
-      "exact" -> (() => { exactIncrement(spark, stateDir, t1New, docsOld, nRaw, id); 0L })
-    ))
-    val newSfxPairs = results(1)
-    if (t1New ne t1Raw) t1Raw.unpersist(blocking = false)
-    repsNew.unpersist(blocking = false)
-    if (t1New ne t1Raw) t1New.unpersist(blocking = false)
-    else t1Raw.unpersist(blocking = false)
+      // The three state-building chains are INDEPENDENT until the commit
+      // marker (disjoint tables: each keyed index's four vs exact_pairs) —
+      // run them concurrently so their fixed per-job costs overlap (the
+      // measured 8–10 s/batch floor was ~17 SEQUENTIAL driver-coordinated
+      // jobs).
+      val results = inParallel(spark.sparkContext, Seq[(String, () => Long)](
+        "lsh" -> (() => { increment(Lsh, spark, stateDir, repsNew, done, id, cfg); 0L }),
+        "suffix" -> (() => {
+          increment(Suffix, spark, stateDir, repsNew, done, id, cfg)
+          if (!collectStats) -1L
+          else readParquet(spark, s"$stateDir/${Suffix.pairs}/batch=$id")
+            .select("a", "b").distinct().count()
+        }),
+        "exact" -> (() => { exactIncrement(spark, stateDir, t1New, docsOld, nRaw, id); 0L })
+      ))
+      (nNew, results(1))
+    } finally cached.foreach(_.unpersist(blocking = false))
 
     val newPairCount =
       if (!collectStats) -1L
@@ -407,110 +413,169 @@ object IncrementalDedup {
     BatchResult(newPairCount, totalDocs, newSfxPairs)
   }
 
-  /** LSH chain of one micro-batch: sign + band the new reps, append their
-    * signature/band/band-count partitions, generate candidates against the
-    * pruned accumulated band state under the running stop cap, verify, and
-    * append the verified pairs with (band, band_hash) provenance. Tables
-    * touched: `signatures`, `bands`, `band_counts`, `lsh_pairs` — disjoint
-    * from the suffix and exact chains, so processBatch runs the three
+  /** One keyed index of the incremental state: per-rep `rows`, the
+    * `keyRows` derived from them (one row per (key, doc)), per-batch
+    * per-key `counts` and the verified `pairs` with key provenance, each an
+    * append-only `batch=<id>` table. `cap` bounds a key's accumulated count;
+    * `jobs` names the four sub-chains (rows write, key-rows write, counts
+    * write, pair path). Everything the two indexes do not share lives in
+    * `head` (new reps → (rows, key rows), both over columns `doc_id`, ...)
+    * and `verify` ((provenance pairs, endpoint-pruned rows) → verified
+    * pairs with at most one row per (a, b)).
+    */
+  private final case class KeyedIndex(
+      rows: String, keyRows: String, counts: String, pairs: String,
+      keys: Seq[String],
+      cap: DedupConfig => Int,
+      jobs: (String, String, String, String),
+      head: (DataFrame, DedupConfig) => (DataFrame, DataFrame),
+      verify: (DataFrame, DataFrame, DedupConfig) => DataFrame)
+
+  /** LSH: signatures keyed by (band, band_hash) under the stop-band cap,
+    * verified by the batch Verifier rule. Bands derive from the signature
+    * PLAN, not the written partition: the kernel re-runs over the
+    * already-materialized repsNew cache (batch-sized — trivial), which lets
+    * the two state writes overlap instead of serializing on a
+    * write→read-back. Rows are identical (deterministic kernel).
+    */
+  private val Lsh = KeyedIndex("signatures", "bands", "band_counts", "lsh_pairs",
+    Seq("band", "band_hash"), _.stopBandSize,
+    ("sigs.write", "bands.write", "bcounts.write", "lsh.pairs"),
+    head = (reps, cfg) => {
+      val sigs = DedupPipeline.signatures(reps.sparkSession, reps, cfg)
+      (sigs, graft.lsh.Banding.bandRows(sigs, cfg))
+    },
+    verify = (prov, sigs, cfg) => graft.verify.Verifier.verifyLshPairs(
+      graft.lsh.CandidatePairs.strongest(prov.select(col("a"), col("b"),
+        when(col("band") < cfg.bands, "minhash").otherwise("simhash").as("src"))),
+      sigs, cfg))
+
+  /** Suffix/containment: token streams keyed by their index fingerprints
+    * (`SuffixPass.indexFps`: minLen-grams or winnowed k-grams) under the
+    * gram df-cap, verified by the batch pass's exact O(n) shared-run test
+    * (suffix array only as the hash-collision fallback). Grams derive from
+    * the token PLAN, like bands from signatures.
+    */
+  private val Suffix = KeyedIndex("toks", "grams", "gram_counts", "sfx_pairs",
+    Seq("fp"), _.suffixDfMax,
+    ("toks.write", "grams.write", "gcounts.write", "sfx.pairs"),
+    head = (reps, cfg) => {
+      val spark = reps.sparkSession
+      import spark.implicits._
+      val minLen = cfg.suffixMinLen
+      val toks = graft.suffix.SuffixPass.tokenDocs(spark, reps, cfg)
+        .filter(_.tokens.length >= minLen) // can't hold a minLen run otherwise
+        .toDF()
+      (toks, toks.select(col("doc_id"), col("tokens")).as[(Long, Array[Long])]
+        .flatMap { case (d, tk) => graft.suffix.SuffixPass.indexFps(tk, cfg).map(fp => (fp, d)) }
+        .toDF("fp", "doc_id"))
+    },
+    verify = (prov, toks, cfg) => {
+      val spark = prov.sparkSession
+      import spark.implicits._
+      val minLen = cfg.suffixMinLen
+      prov.select("a", "b").distinct()
+        .join(toks.select(col("doc_id").as("a"), col("tokens").as("ta")), "a")
+        .join(toks.select(col("doc_id").as("b"), col("tokens").as("tb")), "b")
+        .select(col("a"), col("b"), col("ta"), col("tb"))
+        .as[(Long, Long, Array[Long], Array[Long])]
+        .mapPartitions(_.flatMap { case (a, b, tA, tB) =>
+          if (graft.suffix.SuffixArrays.commonRunAtLeast(tA, tB, minLen) >= minLen) Some((a, b))
+          else None
+        })
+        .toDF("a", "b")
+    })
+
+  private val Indexes = Seq(Lsh, Suffix)
+
+  /** Per-key totals of a count table: the associative merge of per-batch
+    * counts (compaction writes it; [[overCap]] filters it).
+    */
+  private def sumCounts(counts: DataFrame, keys: Seq[String]): DataFrame =
+    counts.groupBy(keys.map(col): _*).agg(sum("cnt").as("cnt"))
+
+  /** The keys whose accumulated count exceeds the index's cap — the running
+    * cap at emission time and the final cap at read time.
+    */
+  private def overCap(ix: KeyedIndex, counts: DataFrame, cfg: DedupConfig): DataFrame =
+    sumCounts(counts, ix.keys).where(col("cnt") > ix.cap(cfg)).select(ix.keys.map(col): _*)
+
+  /** One micro-batch of a keyed index: append the new reps' rows, key rows
+    * and key counts, generate candidates against the pruned accumulated
+    * key-row state under the running cap, verify, and append the verified
+    * pairs with key provenance. Each index touches only its own four
+    * tables, so processBatch runs the two (and the exact chain)
     * concurrently.
     *
-    * Execution strategy (round 6; state rows unchanged): the band-count
-    * write no longer serializes the candidate path — the prune plans read
-    * `committed count partitions ∪ a recount of the just-written band
-    * partition` (row-identical: grams/bands are written before their
-    * counts are consumed, and the recount is the same aggregation the
-    * write runs), so the counts write runs CONCURRENTLY with the
-    * candidate→verify→pair-write path. All intermediates stay
-    * parquet-backed: an earlier attempt to cache them instead broke
-    * exchange reuse inside the prune plans (each broadcast build
-    * recomputed the whole upstream pipeline — per-batch shuffle 2.6×) and
-    * starved the planner of size estimates. Together with the
-    * band-derivation from the signature PLAN below (the two state writes
-    * overlap), the chain's critical path is 5 serial jobs → 3
-    * (max(sigs, bands) write → prov count → pair write).
+    * Execution strategy (state rows unchanged): the counts write does not
+    * serialize the candidate path — the prune plans read `committed count
+    * partitions ∪ a recount of the just-written key-row partition`
+    * (row-identical: key rows are written before their counts are
+    * consumed, and the recount is the same aggregation the write runs), so
+    * the counts write runs CONCURRENTLY with the candidate→verify→pair-write
+    * path. All intermediates stay parquet-backed: an earlier attempt to
+    * cache them instead broke exchange reuse inside the prune plans (each
+    * broadcast build recomputed the whole upstream pipeline — per-batch
+    * shuffle 2.6×) and starved the planner of size estimates. With the two
+    * head writes overlapping, the critical path is 3 serial jobs
+    * (max(rows, key rows) write → provenance count → pair write).
     */
-  private def lshIncrement(spark: SparkSession, stateDir: String,
-      repsNew: DataFrame, done: Seq[Long], id: Long, nNew: Long,
-      cfg: DedupConfig): Unit = {
-    val sigsNew = DedupPipeline.signatures(spark, repsNew, cfg)
-    // bands derive from the signature PLAN, not the written partition: the
-    // kernel re-runs over the already-materialized repsNew cache (batch-
-    // sized — trivial), which lets the two append-only state writes
-    // overlap instead of serializing on a write→read-back. Rows are
-    // identical (deterministic kernel); the candidate path below reads
-    // the written parquet as before (clean scans keep exchange reuse and
-    // size estimates intact — see the chain scaladoc).
-    val bandsNew = graft.lsh.Banding.bandRows(sigsNew, cfg)
-    inParallel(spark.sparkContext, Seq[(String, () => Unit)](
-      "sigs.write" -> (() => timed("sigs.write")(sigsNew
-        .write.mode("overwrite").parquet(s"$stateDir/signatures/batch=$id"))),
-      "bands.write" -> (() => timed("bands.write")(bandsNew
-        .write.mode("overwrite").parquet(s"$stateDir/bands/batch=$id")))))
-    val bandsNewD = readParquet(spark, s"$stateDir/bands/batch=$id")
-    val bcNew = bandsNewD.groupBy("band", "band_hash").agg(count(lit(1)).as("cnt"))
+  private def increment(ix: KeyedIndex, spark: SparkSession, stateDir: String,
+      repsNew: DataFrame, done: Seq[Long], id: Long, cfg: DedupConfig): Unit = {
+    val (rowsJob, keyRowsJob, countsJob, pairsJob) = ix.jobs
+    def partition(table: String) = s"$stateDir/$table/batch=$id"
+    def accumulated(table: String) = readState(spark, stateDir, table, done, alsoBatch = id).get
+    val keyCols = ix.keys.map(col)
+    val keyDocCols = keyCols :+ col("doc_id")
+    val (rowsNew, keyRowsNew) = ix.head(repsNew, cfg)
+    // the key-row count rides the key write's observation (gram keys scale
+    // with TOKENS, not docs, and a follow-up count job is a job the fixed
+    // floor can't spare); it bounds the row count of every pruned key side
+    val nKeyRows = inParallel(spark.sparkContext, Seq[(String, () => Long)](
+      rowsJob -> (() => { timed(rowsJob)(rowsNew
+        .write.mode("overwrite").parquet(partition(ix.rows))); 0L }),
+      keyRowsJob -> (() => timed(keyRowsJob)(writeCounted(keyRowsNew, partition(ix.keyRows))))))(1)
+    val keyRowsD = readParquet(spark, partition(ix.keyRows)).select(keyDocCols: _*)
+    val countsNew = keyRowsD.groupBy(keyCols: _*).agg(count(lit(1)).as("cnt"))
 
     inParallel(spark.sparkContext, Seq[(String, () => Unit)](
-      // running band counts: this batch's per-key counts land in their own
-      // append-only partition, exactly like bands/signatures
-      "bcounts.write" -> (() => timed("bcounts.write")(bcNew
-        .write.mode("overwrite").parquet(s"$stateDir/band_counts/batch=$id"))),
-      "lsh.pairs" -> (() => {
-        val bandsAll = readState(spark, stateDir, "bands", done, alsoBatch = id).get
-          .select("band", "band_hash", "doc_id")
-        val sigsAll = readState(spark, stateDir, "signatures", done, alsoBatch = id).get
-          .select("doc_id", "minhash", "simhash")
-        // committed counts ∪ recount of the written band partition — the
+      countsJob -> (() => timed(countsJob)(countsNew
+        .write.mode("overwrite").parquet(partition(ix.counts)))),
+      pairsJob -> (() => {
+        // committed counts ∪ recount of the written key-row partition — the
         // counts write above need not finish before this plan runs
-        val countsAll = readState(spark, stateDir, "band_counts", done) match {
-          case Some(old) => old.select("band", "band_hash", "cnt")
-            .unionByName(bcNew.select("band", "band_hash", "cnt"))
-          case None => bcNew.select("band", "band_hash", "cnt")
-        }
+        val countsAll = readState(spark, stateDir, ix.counts, done)
+          .map(_.select(keyCols :+ col("cnt"): _*).unionByName(countsNew))
+          .getOrElse(countsNew)
+        // probe-side prune + running cap (see the object scaladoc)
+        val newKeys = keyRowsD.select(keyCols: _*).distinct()
+        val hot = overCap(ix, prune(countsAll, newKeys, ix.keys, nKeyRows, "left_semi"), cfg)
+        val kept = prune(keyRowsD, hot, ix.keys, nKeyRows, "left_anti")
+        val probe = prune(prune(accumulated(ix.keyRows).select(keyDocCols: _*),
+          newKeys, ix.keys, nKeyRows, "left_semi"), hot, ix.keys, nKeyRows, "left_anti")
 
-        // Probe-side prune + running stop-band cap (see scaladoc).
-        // nBandKeys bounds the distinct-key row count of every pruned side.
-        val nBandKeys = nNew * (cfg.bands + cfg.simhashBlocks)
-        val newKeys = bandsNewD.select("band", "band_hash").distinct()
-        val hotKeys = semiPrune(countsAll, newKeys, Seq("band", "band_hash"), nBandKeys)
-          .groupBy("band", "band_hash").agg(sum("cnt").as("total"))
-          .where(col("total") > cfg.stopBandSize)
-          .select("band", "band_hash")
-        val bandsNewKept = antiPrune(bandsNewD.select("band", "band_hash", "doc_id"),
-          hotKeys, Seq("band", "band_hash"), nBandKeys)
-        val bandsProbe = antiPrune(
-          semiPrune(bandsAll, newKeys, Seq("band", "band_hash"), nBandKeys),
-          hotKeys, Seq("band", "band_hash"), nBandKeys)
-
-        // LSH candidates touching a new rep, WITH band provenance (the
-        // read-time retroactive cap needs to know which bands emitted a
-        // pair). Persisted: it feeds the verify join, the endpoint prune,
-        // and the provenance write.
-        val prov = bandsNewKept.select(col("band"), col("band_hash"), col("doc_id").as("n"))
-          .join(bandsProbe.select(col("band"), col("band_hash"), col("doc_id").as("m")),
-            Seq("band", "band_hash"))
+        // candidates touching a new rep, WITH key provenance (the read-time
+        // retroactive cap needs to know which keys emitted a pair).
+        // Persisted: it feeds the endpoint prune, the verify join and the
+        // provenance write, and its count bounds the endpoint broadcast
+        val prov = kept.withColumnRenamed("doc_id", "n")
+          .join(probe.withColumnRenamed("doc_id", "m"), ix.keys)
           .where(col("n") =!= col("m"))
-          .select(least(col("n"), col("m")).as("a"), greatest(col("n"), col("m")).as("b"),
-            col("band"), col("band_hash"))
+          .select(least(col("n"), col("m")).as("a") +: greatest(col("n"), col("m")).as("b") +:
+            keyCols: _*)
           .distinct()
           .persist()
-        val nProv = timed("lshprov.count")(prov.count())
-
-        val lshCands = graft.lsh.CandidatePairs.strongest(
-          prov.select(col("a"), col("b"),
-            when(col("band") < cfg.bands, "minhash").otherwise("simhash").as("src")))
-
-        // verify against endpoint-pruned signatures: candidates touch
-        // ≤ 2·|prov| docs, so the O(corpus) signature state stays out of
-        // the verify joins
-        val ends = prov.select(col("a").as("doc_id"))
-          .unionByName(prov.select(col("b").as("doc_id"))).distinct()
-        val sigsCand = semiPrune(sigsAll, ends, Seq("doc_id"), 2 * nProv)
-        val verifiedLsh = graft.verify.Verifier.verifyLshPairs(lshCands, sigsCand, cfg)
-
-        timed("lshpairs.write")(prov.join(verifiedLsh.select("a", "b", "est_jaccard", "src"), Seq("a", "b"))
-          .write.mode("overwrite").parquet(s"$stateDir/lsh_pairs/batch=$id"))
-        prov.unpersist(blocking = false)
+        try {
+          val nProv = timed(s"${ix.pairs}.prov")(prov.count())
+          // verify against endpoint-pruned rows: candidates touch ≤ 2·|prov|
+          // docs, so the O(corpus) row state stays out of the verify joins
+          val ends = prov.select(col("a").as("doc_id"))
+            .unionByName(prov.select(col("b").as("doc_id"))).distinct()
+          val verified = ix.verify(prov,
+            prune(accumulated(ix.rows), ends, Seq("doc_id"), 2 * nProv, "left_semi"), cfg)
+          timed(s"${ix.pairs}.write")(prov.join(verified, Seq("a", "b"))
+            .write.mode("overwrite").parquet(partition(ix.pairs)))
+        } finally prov.unpersist(blocking = false)
       })))
   }
 
@@ -527,8 +592,8 @@ object IncrementalDedup {
       .select(col("nm").as("a"), col("doc_id").as("b"))
     val glue = docsOld match {
       case Some(old) =>
-        val prevReps = semiPrune(old, newMin.select("content_sha256"),
-            Seq("content_sha256"), nNew)
+        val prevReps = prune(old, newMin.select("content_sha256"),
+            Seq("content_sha256"), nNew, "left_semi")
           .groupBy("content_sha256").agg(min("doc_id").as("pr"))
         newMin.join(prevReps, "content_sha256")
           .select(least(col("nm"), col("pr")).as("a"), greatest(col("nm"), col("pr")).as("b"))
@@ -564,118 +629,8 @@ object IncrementalDedup {
       spark.createDataFrame(rows).write.mode("append").parquet(s"$stateDir/stage_meta")
   }
 
-  /** Incremental suffix/containment pass (scaladoc above): tokenize the new
-    * sha-rep docs, append their token streams / minLen-gram index /
-    * per-gram counts as batch partitions, generate candidates new×all over
-    * grams under the RUNNING df-cap (pruned probe side, like the band
-    * join), verify with the per-pair suffix-array kernel, and append the
-    * verified pairs WITH anchor-gram provenance — the read side ([[edges]])
-    * applies the final retroactive cap.
-    *
-    * @return number of verified suffix pair rows appended for this batch
-    */
-  private def suffixIncrement(spark: SparkSession, stateDir: String,
-      repsNew: DataFrame, done: Seq[Long], id: Long,
-      cfg: DedupConfig, collectStats: Boolean = true): Long = {
-    import spark.implicits._
-    val minLen = cfg.suffixMinLen
-
-    // Round-6 execution strategy (state rows unchanged, mirrors
-    // lshIncrement): the gram-count write no longer serializes the
-    // candidate path — the prune plans read `committed count partitions ∪
-    // a recount of the just-written gram partition` and run CONCURRENTLY
-    // with the counts write. Intermediates stay parquet-backed (see
-    // lshIncrement: cached intermediates broke exchange reuse in the prune
-    // plans and starved the planner of size estimates).
-    val toksNew = graft.suffix.SuffixPass.tokenDocs(spark, repsNew, cfg)
-      .filter(_.tokens.length >= minLen) // can't hold a minLen run otherwise
-      .toDF()
-    // grams derive from the token PLAN, not the written partition (mirrors
-    // the LSH chain: the tokenize re-runs over the materialized repsNew
-    // cache, letting the two state writes overlap). The gram-key volume
-    // bound rides the gram write's observation (grams scale with TOKENS,
-    // not docs, so a doc bound would be wildly wrong here — and a
-    // follow-up count job is a job the fixed floor can't spare).
-    val gramsNew =
-      toksNew.select(col("doc_id"), col("tokens")).as[(Long, Array[Long])]
-        .flatMap { case (d, tk) =>
-          graft.suffix.SuffixPass.indexFps(tk, cfg).map(fp => (fp, d))
-        }
-        .toDF("fp", "doc_id")
-    val nGramRows = inParallel(spark.sparkContext, Seq[(String, () => Long)](
-      "toks.write" -> (() => { timed("toks.write")(toksNew
-        .write.mode("overwrite").parquet(s"$stateDir/toks/batch=$id")); 0L }),
-      "grams.write" -> (() => timed("grams.write")(
-        writeCounted(gramsNew, s"$stateDir/grams/batch=$id")))))(1)
-    val gramsNewD = readParquet(spark, s"$stateDir/grams/batch=$id")
-    // grams() emits distinct fps per doc, so count(*) = docs-per-gram
-    val gcNew = gramsNewD.groupBy("fp").agg(count(lit(1)).as("cnt"))
-
-    inParallel(spark.sparkContext, Seq[(String, () => Long)](
-      "gcounts.write" -> (() => { timed("gcounts.write")(gcNew
-        .write.mode("overwrite").parquet(s"$stateDir/gram_counts/batch=$id")); 0L }),
-      "sfx.pairs" -> (() => {
-        // committed counts ∪ recount of the written gram partition — the
-        // counts write above need not finish before this plan runs
-        val gcountsAll = readState(spark, stateDir, "gram_counts", done) match {
-          case Some(old) => old.select("fp", "cnt").unionByName(gcNew.select("fp", "cnt"))
-          case None => gcNew.select("fp", "cnt")
-        }
-        val newFps = gramsNewD.select("fp").distinct()
-        val hotFps = semiPrune(gcountsAll, newFps, Seq("fp"), nGramRows)
-          .groupBy("fp").agg(sum("cnt").as("total"))
-          .where(col("total") > cfg.suffixDfMax)
-          .select("fp")
-        val gramsNewKept = antiPrune(gramsNewD, hotFps, Seq("fp"), nGramRows)
-        val gramsProbe = antiPrune(
-          semiPrune(readState(spark, stateDir, "grams", done, alsoBatch = id).get,
-            newFps, Seq("fp"), nGramRows),
-          hotFps, Seq("fp"), nGramRows)
-
-        // candidate pairs WITH anchor-gram provenance (read-time cap needs
-        // it); persisted — it feeds the endpoint prune, the verify join and
-        // the provenance write, and its count bounds the broadcast decision
-        val prov = gramsNewKept.select(col("fp"), col("doc_id").as("n"))
-          .join(gramsProbe.select(col("fp"), col("doc_id").as("m")), Seq("fp"))
-          .where(col("n") =!= col("m"))
-          .select(least(col("n"), col("m")).as("a"), greatest(col("n"), col("m")).as("b"), col("fp"))
-          .distinct()
-          .persist()
-        val nProv = timed("sfxprov.count")(prov.count())
-
-        // verify each distinct pair once; token streams attach
-        // endpoint-pruned (guarded — a boilerplate-heavy batch can push the
-        // candidate endpoint set past any safe broadcast size)
-        val candPairs = prov.select("a", "b").distinct()
-        val ends = candPairs.select(col("a").as("doc_id"))
-          .unionByName(candPairs.select(col("b").as("doc_id"))).distinct()
-        val toksCand = semiPrune(
-          readState(spark, stateDir, "toks", done, alsoBatch = id).get,
-          ends, Seq("doc_id"), 2 * nProv)
-        val verifiedSfx = candPairs
-          .join(toksCand.select(col("doc_id").as("a"), col("tokens").as("ta")), "a")
-          .join(toksCand.select(col("doc_id").as("b"), col("tokens").as("tb")), "b")
-          .select(col("a"), col("b"), col("ta"), col("tb"))
-          .as[(Long, Long, Array[Long], Array[Long])]
-          .mapPartitions(_.flatMap { case (a, b, tA, tB) =>
-            // same exact O(n) decision as the batch pass (SA only as the
-            // hash-collision fallback arbiter)
-            if (graft.suffix.SuffixArrays.commonRunAtLeast(tA, tB, minLen) >= minLen) Some((a, b))
-            else None
-          })
-          .toDF("a", "b")
-
-        timed("sfxpairs.write")(prov.join(verifiedSfx, Seq("a", "b"), "left_semi")
-          .write.mode("overwrite").parquet(s"$stateDir/sfx_pairs/batch=$id"))
-        prov.unpersist(blocking = false)
-        if (!collectStats) -1L
-        else readParquet(spark, s"$stateDir/sfx_pairs/batch=$id")
-          .select("a", "b").distinct().count()
-      })))(1)
-  }
-
-  private val StateTables = Seq("docs", "signatures", "bands", "band_counts",
-    "toks", "grams", "gram_counts", "lsh_pairs", "exact_pairs", "sfx_pairs")
+  private val StateTables = "docs" +:
+    Indexes.flatMap(ix => Seq(ix.rows, ix.keyRows, ix.counts, ix.pairs)) :+ "exact_pairs"
 
   /** Compact the committed state into one generational base partition per
     * table, bounding partition/file count over a long stream (thousands of
@@ -737,16 +692,13 @@ object IncrementalDedup {
     f.delete(new Path(tmpRoot), true)
     // one staging write per table, all independent → overlap their fixed
     // job costs (same lever as processBatch's concurrent chains)
+    // (count tables re-aggregate to one row per key; every other table is
+    // the plain union, minus the partition-discovery column)
+    val countKeys = Indexes.map(ix => ix.counts -> ix.keys).toMap
     inParallel(spark.sparkContext, StateTables.map { t => t -> { () =>
       readState(spark, stateDir, t, ids).foreach { df =>
-        val merged = t match {
-          case "band_counts" =>
-            df.groupBy("band", "band_hash").agg(sum("cnt").as("cnt"))
-          case "gram_counts" =>
-            df.groupBy("fp").agg(sum("cnt").as("cnt"))
-          case _ => df.drop("batch") // partition-discovery column
-        }
-        merged.write.mode("overwrite").parquet(s"$tmpRoot/$t")
+        countKeys.get(t).fold(df.drop("batch"))(sumCounts(df, _))
+          .write.mode("overwrite").parquet(s"$tmpRoot/$t")
       }
     }})
     if (failBeforeMarker) return
@@ -798,35 +750,22 @@ object IncrementalDedup {
     */
   def liveLshPairs(spark: SparkSession, stateDir: String,
       cfg: DedupConfig = DedupConfig.default): DataFrame =
-    liveLshPairsOf(spark, stateDir, cfg, committedIds(spark, stateDir))
-
-  private def liveLshPairsOf(spark: SparkSession, stateDir: String,
-      cfg: DedupConfig, committed: Seq[Long]): DataFrame =
-    (readState(spark, stateDir, "lsh_pairs", committed),
-      readState(spark, stateDir, "band_counts", committed)) match {
-      case (Some(lsh), Some(counts)) =>
-        val hot = counts.groupBy("band", "band_hash").agg(sum("cnt").as("total"))
-          .where(col("total") > cfg.stopBandSize)
-          .select("band", "band_hash")
-        lsh.join(hot, Seq("band", "band_hash"), "left_anti")
-          .select("a", "b").distinct()
-      case _ => emptyPairs(spark)
-    }
+    livePairsOf(Lsh, spark, stateDir, cfg, committedIds(spark, stateDir))
 
   /** Verified suffix pairs still live under the FINAL gram df-cap. */
   def liveSuffixPairs(spark: SparkSession, stateDir: String,
       cfg: DedupConfig = DedupConfig.default): DataFrame =
-    liveSuffixPairsOf(spark, stateDir, cfg, committedIds(spark, stateDir))
+    livePairsOf(Suffix, spark, stateDir, cfg, committedIds(spark, stateDir))
 
-  private def liveSuffixPairsOf(spark: SparkSession, stateDir: String,
+  /** A keyed index's verified pairs with ≥1 emitting key under its FINAL
+    * cap — the read-time half of the retroactive cap.
+    */
+  private def livePairsOf(ix: KeyedIndex, spark: SparkSession, stateDir: String,
       cfg: DedupConfig, committed: Seq[Long]): DataFrame =
-    (readState(spark, stateDir, "sfx_pairs", committed),
-      readState(spark, stateDir, "gram_counts", committed)) match {
-      case (Some(sfx), Some(counts)) =>
-        val hot = counts.groupBy("fp").agg(sum("cnt").as("total"))
-          .where(col("total") > cfg.suffixDfMax)
-          .select("fp")
-        sfx.join(hot, Seq("fp"), "left_anti").select("a", "b").distinct()
+    (readState(spark, stateDir, ix.pairs, committed),
+      readState(spark, stateDir, ix.counts, committed)) match {
+      case (Some(pairs), Some(counts)) =>
+        pairs.join(overCap(ix, counts, cfg), ix.keys, "left_anti").select("a", "b").distinct()
       case _ => emptyPairs(spark)
     }
 
@@ -854,9 +793,8 @@ object IncrementalDedup {
 
   private def edgesOf(spark: SparkSession, stateDir: String,
       cfg: DedupConfig, committed: Seq[Long]): DataFrame =
-    liveLshPairsOf(spark, stateDir, cfg, committed)
-      .unionByName(exactEdgesOf(spark, stateDir, committed))
-      .unionByName(liveSuffixPairsOf(spark, stateDir, cfg, committed))
+    Indexes.map(livePairsOf(_, spark, stateDir, cfg, committed))
+      .foldLeft(exactEdgesOf(spark, stateDir, committed))(_ unionByName _)
       .distinct()
 
   /** Final clusters over the accumulated live edge set (committed state

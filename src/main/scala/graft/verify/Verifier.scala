@@ -36,13 +36,8 @@ import graft.conf.DedupConfig
   */
 object Verifier {
 
-  /** @param passthrough extra `pairs` columns carried through verification
-    *        untouched (e.g. (band, band_hash) provenance in the streaming
-    *        path); the batch path passes none, keeping its shuffle rows slim
-    */
-  def verifyLshPairs(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig,
-      passthrough: Seq[String] = Nil): DataFrame = {
-    val keep = Seq("a", "b", "src") ++ passthrough
+  def verifyLshPairs(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig): DataFrame = {
+    val keep = Seq("a", "b", "src")
     val minEqualLanes = math.ceil(cfg.jaccardTau * cfg.numPerms).toInt
     val prefiltered =
       if (cfg.numPerms % 64 == 0) {
@@ -77,8 +72,7 @@ object Verifier {
           / lit(cfg.numPerms.toDouble))
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
       .where(col("est_jaccard") >= cfg.jaccardTau || col("hamming") <= cfg.hammingMax)
-      .select(Seq(col("a"), col("b"), col("est_jaccard"), col("src")) ++
-        passthrough.map(col): _*)
+      .select("a", "b", "est_jaccard", "src")
   }
 
   /** Exact Jaccard on shingle arrays — calibration / oracle surface

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
 
 import graft.conf.DedupConfig
 import graft.io.ParquetCatalog
@@ -70,11 +71,24 @@ class FooterSchemaSpec extends AnyFunSuite with SparkTestBase {
     val state = tables(stateDir)
     assert(state.toSet === Set("docs", "signatures", "bands", "band_counts", "toks", "grams",
       "gram_counts", "lsh_pairs", "exact_pairs", "sfx_pairs", "stage_meta"))
-    state.foreach { t =>
+    val checksums = state.flatMap { t =>
       val df = assertSameRead(s"$stateDir/$t")
-      if (t != "stage_meta")
+      if (t == "stage_meta") None // wall times and timestamps differ per run
+      else {
         assert(df.schema.fieldNames.last === "batch", s"$t: batch partition column not discovered")
-    }
+        Some(t -> df.select(bit_xor(xxhash64(df.columns.toSeq.map(col): _*))).head().getLong(0))
+      }
+    }.toMap
+    // order-independent checksum of every state row, the batch column
+    // included: a state row that moves, appears or goes changes its table's
+    // value (values written by the engine before the LSH and suffix chains
+    // became one keyed-index increment)
+    assert(checksums === Map(
+      "docs" -> -4637649671301025085L, "exact_pairs" -> 3973349864120733141L,
+      "signatures" -> 709524405889739957L, "bands" -> 3919509952445195741L,
+      "band_counts" -> -3810817664640860993L, "lsh_pairs" -> 5837035334687542917L,
+      "toks" -> 8791984279575553657L, "grams" -> 5865391622395393332L,
+      "gram_counts" -> -4767710603060009214L, "sfx_pairs" -> -575092351001869371L))
   }
 
   test("a decoy data file under a _-prefixed or .-prefixed name is ignored") {

@@ -151,17 +151,25 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
     // round-5 VERDICT item 6 asked for this implicit property as an
     // explicit test: any failure inside processBatch — here a runtime
     // error in the batch's own evaluation — must propagate BEFORE the
-    // marker write, so a replay recomputes instead of trusting half state
-    import org.apache.spark.sql.functions.{lit, raise_error}
+    // marker write, so a replay recomputes instead of trusting half state.
+    // The error reads a column of a non-local relation, so it fires when a
+    // job runs, not when the optimizer folds the projection over local rows
+    // (that would fail before anything persists)
+    import org.apache.spark.sql.functions.{col, concat, lit, raise_error}
     val dir = java.nio.file.Files.createTempDirectory("graft-incr-fail").toString
     val bad = spark.createDataFrame(Seq(("r", "p", "c", "en", "some text here")))
-      .toDF("repo", "path", "commit", "lang", "content")
-      .withColumn("content", raise_error(lit("boom")).cast("string"))
+      .toDF("repo", "path", "commit", "lang", "content").repartition(1)
+      .withColumn("content", raise_error(concat(lit("boom: "), col("content"))).cast("string"))
+    val cachedBefore = org.apache.spark.sql.GraftSqlTestBridge.cachedPlans(spark)
     intercept[Exception] {
       IncrementalDedup.processBatch(spark, bad, dir, graft.conf.DedupConfig.default)
     }
     val commits = new java.io.File(s"$dir/_commits")
     assert(!commits.exists() || commits.list().isEmpty,
       s"failed batch left commit markers: ${Option(commits.list()).map(_.toSeq)}")
+    // and leaves no cached plan behind: a retried batch must not pile up
+    // the failed attempt's persisted frames in the session
+    assert(org.apache.spark.sql.GraftSqlTestBridge.cachedPlans(spark) === cachedBefore,
+      "the failed batch leaked cached plans")
   }
 }
