@@ -73,15 +73,10 @@ object Dedup {
     var chainFp = Hashing.xxString(cfg.fingerprint + "|" + inputId, Hashing.DefaultSeed).toHexString
 
     /** Write one table with its lineage row (`wallMs` is read once the
-      * write has finished). Row counts ride an `observe` on the write job
-      * itself (no extra pass over the written stage — re-reading a
-      * checkpoint to count it would double every stage's I/O at corpus
-      * scale).
+      * write has finished); the row count is the one the write observed.
       */
     def write(name: String, df: DataFrame, wallMs: => Long): Unit = {
-      val obs = org.apache.spark.sql.Observation(s"stage_${name}_${System.nanoTime()}")
-      cat.write(df.observe(obs, count(lit(1)).as("rows")), name)
-      val rows = obs.get.get("rows").collect { case l: Long => l }.getOrElse(-1L)
+      val rows = cat.write(df, name)
       StageMeta.record(spark, cat, runId, name, chainFp, wallMs, rows)
     }
 

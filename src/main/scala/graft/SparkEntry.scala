@@ -110,15 +110,13 @@ object SparkEntry {
         // single-file scan = one partition; spread before the kernels
         .repartition(8)
     val I = graft.streaming.IncrementalDedup
-    // collectStats = false: the reporting counts are ~3 driver actions
-    // per batch on the fixed-cost floor and nothing here reads them
-    I.processBatch(s2, slice(0), dir, cfg, collectStats = false)
-    I.processBatch(s2, slice(1), dir, cfg, collectStats = false)
-    I.processBatch(s2, slice(2), dir, cfg, collectStats = false)
+    I.processBatch(s2, slice(0), dir, cfg)
+    I.processBatch(s2, slice(1), dir, cfg)
+    I.processBatch(s2, slice(2), dir, cfg)
     I.compactState(s2, dir) // merges 0–1 into base gen-1, keeps 2
     require(new java.io.File(s"$dir/docs/batch=-1").exists(),
       "driver-path compaction was a no-op — the incr oracle would stop covering the base")
-    I.processBatch(s2, slice(3), dir, cfg, collectStats = false)
+    I.processBatch(s2, slice(3), dir, cfg)
     dir
   }
 

@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-stage lineage + metrics (SURVEY.md §1.2 T9): one row per output
-  * partition file with row/byte counts, plus the input fingerprint the
-  * stage was computed from. Powers exact resume: a stage is reusable iff
+  * part file with its byte count and one `_total` row with the stage's
+  * observed row count, each with the input fingerprint the stage was
+  * computed from. Powers exact resume: a stage is reusable iff
   * it is complete (_SUCCESS) AND its recorded fingerprint equals the
   * fingerprint recomputed from the current upstream chain + config.
   *
@@ -21,22 +22,21 @@ object StageMeta {
       run_id: String,
       stage: String,
       partition_file: String,
-      // None when the per-file split is unknown (observed-count mode records
-      // only the `_total` row) — a NULL instead of a -1 sentinel, so naive
-      // `sum(rows)` per stage stays correct in every mode
+      // None when the per-file split is unknown (the observed count lands
+      // on the `_total` row only) — a NULL instead of a -1 sentinel, so
+      // naive `sum(rows)` per stage stays correct
       rows: Option[Long],
       bytes: Long,
       input_fingerprint: String,
       wall_ms: Long,
       ts: java.sql.Timestamp)
 
-  /** Record lineage for a stage that was just written to `catalog`.
-    *
-    * Row counts: pass `totalRows` observed DURING the write job (see
-    * [[observedWrite]]) — re-reading a checkpointed stage just to count it
-    * would double the I/O of every stage at corpus scale. When `totalRows`
-    * is negative (small/test callers), fall back to the honest read-back
-    * per-file counts. Byte sizes always come from the file system (free).
+  /** Record lineage for a stage that was just written to `catalog`:
+    * `totalRows` is the count its write observed ([[Counted.write]]) —
+    * re-reading a checkpointed stage just to count it would double the I/O
+    * of every stage at corpus scale. It lands on the `_total` row; the one
+    * row per part file carries the file's bytes (from the FS, free) and a
+    * NULL row count, since the per-file split is not observed.
     */
   def record(
       spark: SparkSession,
@@ -45,40 +45,16 @@ object StageMeta {
       stage: String,
       fingerprint: String,
       wallMs: Long,
-      totalRows: Long = -1L): Unit = {
-    import spark.implicits._
-    val loc = catalog.location(stage)
-    val p = new Path(loc)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(p).filter(f => f.getPath.getName.endsWith(".parquet"))
-    val perFile: Map[String, Long] =
-      if (files.isEmpty || totalRows >= 0) Map.empty
-      else ParquetCatalog.readParquet(spark, loc)
-        .groupBy(input_file_name().as("partition_file"))
-        .agg(count(lit(1)).as("rows"))
-        .as[(String, Long)].collect().toMap
+      totalRows: Long): Unit = {
+    val p = new Path(catalog.location(stage))
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val rowsOut0 = files.toSeq.map { f =>
-      // with observed totals the per-file row split is unknown (NULL); bytes
-      // stay per-file from the FS
-      val rows =
-        if (totalRows >= 0) None
-        else Some(perFile.collect { case (k, v) if k.endsWith(f.getPath.getName) => v }.sum)
-      MetaRow(runId, stage, f.getPath.getName, rows, f.getLen, fingerprint, wallMs, now)
-    }
-    val totalRow =
-      if (totalRows >= 0)
-        Seq(MetaRow(runId, stage, "_total", Some(totalRows),
-          files.map(_.getLen).sum, fingerprint, wallMs, now))
-      else Nil
-    // An empty stage table (e.g. stop_bands with no hot groups) may write
-    // zero part files — still record one lineage row so resume bookkeeping
-    // can see the stage/fingerprint.
-    val rowsOut =
-      if (rowsOut0.nonEmpty || totalRow.nonEmpty) rowsOut0 ++ totalRow
-      else Seq(MetaRow(runId, stage, "_empty", Some(0L), 0L, fingerprint, wallMs, now))
-    val metaDf = spark.createDataFrame(rowsOut)
-    metaDf.write.mode("append").parquet(s"${catalog.location(StageMetaDir)}")
+    val rows = files.map { f =>
+      MetaRow(runId, stage, f.getPath.getName, None, f.getLen, fingerprint, wallMs, now)
+    } :+ MetaRow(runId, stage, "_total", Some(totalRows), files.map(_.getLen).sum,
+      fingerprint, wallMs, now)
+    spark.createDataFrame(rows).write.mode("append").parquet(catalog.location(StageMetaDir))
   }
 
   private val MetaSchema = Encoders.product[MetaRow].schema

@@ -5,7 +5,8 @@ import scala.util.Try
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Stage-table storage behind a thin trait (SURVEY.md §2 rows 1–2).
@@ -14,10 +15,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * sandbox ships no Iceberg jars, so [[ParquetCatalog]] is the local
   * implementation with the same atomic-replace semantics (write to a temp
   * dir, rename over). Both are exercised through the same call sites in
-  * [[graft.Dedup]].
+  * [[graft.Dedup]]. A write returns the rows it wrote ([[Counted]]).
   */
 trait TableCatalog {
-  def write(df: DataFrame, stage: String, partitionBy: Seq[String] = Nil): Unit
+  def write(df: DataFrame, stage: String): Long
   def read(spark: SparkSession, stage: String): DataFrame
   def exists(spark: SparkSession, stage: String): Boolean
   def location(stage: String): String
@@ -32,11 +33,7 @@ trait TableCatalog {
 final class ParquetCatalog(root: String) extends TableCatalog {
   override def location(stage: String): String = s"$root/$stage"
 
-  override def write(df: DataFrame, stage: String, partitionBy: Seq[String]): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(location(stage))
-  }
+  override def write(df: DataFrame, stage: String): Long = Counted.write(df, location(stage))
 
   override def read(spark: SparkSession, stage: String): DataFrame =
     ParquetCatalog.readParquet(spark, location(stage))
@@ -107,6 +104,39 @@ object ParquetCatalog {
     }
 }
 
+/** A frame with a row-count [[Observation]] attached: [[rows]] is the
+  * number of rows that passed through [[frame]] in the action that ran it,
+  * counted inside that action's own job. [[Counted.write]] is the one way
+  * the engines write a table (`Dedup.run`'s stages, `IncrementalDedup`'s
+  * state partitions and compaction bases): every lineage row records the
+  * count its write observed, and a count a batch needs rides the write
+  * that produces the rows, never a follow-up job over what was written.
+  */
+final class Counted private (df: DataFrame) {
+  private val obs = Observation()
+  val frame: DataFrame = df.observe(obs, count(lit(1)).as("rows"))
+
+  /** Blocks until an action over a plan holding [[frame]] has finished.
+    * When the optimizer proved [[frame]] empty and dropped it from the
+    * executed plan (AQE does so when a join's other side is empty), the
+    * observation completes without the metric: that is zero rows.
+    */
+  def rows: Long = obs.get.get("rows").fold(0L)(_.asInstanceOf[Long])
+}
+
+object Counted {
+  def apply(df: DataFrame): Counted = new Counted(df)
+
+  /** Overwrite the parquet directory `path` with `df`; returns the rows
+    * written.
+    */
+  def write(df: DataFrame, path: String): Long = {
+    val c = Counted(df)
+    c.frame.write.mode("overwrite").parquet(path)
+    c.rows
+  }
+}
+
 /** Documented production implementation: Iceberg tables under a configured
   * catalog (`spark.sql.catalog.<name>` = org.apache.iceberg.spark.SparkCatalog).
   * Uses only the public DSv2 API, so it compiles without Iceberg on the
@@ -116,10 +146,12 @@ object ParquetCatalog {
 final class IcebergCatalog(catalogAndDb: String) extends TableCatalog {
   override def location(stage: String): String = s"$catalogAndDb.$stage"
 
-  override def write(df: DataFrame, stage: String, partitionBy: Seq[String]): Unit = {
+  override def write(df: DataFrame, stage: String): Long = {
     // createOrReplace = atomic snapshot swap in Iceberg; partitioning is
     // carried by the existing table spec (bucket(doc_id) / lang in prod).
-    df.writeTo(location(stage)).createOrReplace()
+    val c = Counted(df)
+    c.frame.writeTo(location(stage)).createOrReplace()
+    c.rows
   }
 
   override def read(spark: SparkSession, stage: String): DataFrame =

@@ -1,12 +1,13 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.DedupPipeline
 import graft.conf.DedupConfig
+import graft.io.Counted
 import graft.io.ParquetCatalog.readParquet
 
 /** Incremental / streaming dedup (SURVEY.md §2.8).
@@ -89,7 +90,14 @@ import graft.io.ParquetCatalog.readParquet
   */
 object IncrementalDedup {
 
-  final case class BatchResult(newPairs: Long, totalDocs: Long, newSuffixPairs: Long = 0L)
+  /** New verified pairs of one batch: LSH ∪ exact edges, and suffix
+    * containment pairs, each as distinct (a, b). Both are zero for a
+    * replayed batch.
+    */
+  final case class BatchResult(newPairs: Long, newSuffixPairs: Long)
+
+  /** What one state chain wrote: rows per table, and its new pairs. */
+  private final case class ChainOut(rows: Map[String, Long], newPairs: Long)
 
   /** Keys-side row cap for broadcasting the semi-join prunes; above it fall
     * back to a shuffle semi-join (correct, just pays an exchange — a batch
@@ -178,27 +186,6 @@ object IncrementalDedup {
     */
   private val chainContext = new ThreadLocal[(String, Long)]
 
-  private val Debug = sys.env.get("GRAFT_INCR_DEBUG").contains("1")
-  private def timed[A](name: String)(f: => A): A =
-    if (!Debug) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[incr] $name%-16s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-
-  /** Row count of a write job read from an attached [[Observation]] — the
-    * count the batch needs anyway, without a second job over the written
-    * partition.
-    */
-  private def writeCounted(df: DataFrame, dest: String): Long = {
-    val obs = Observation()
-    df.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(dest)
-    obs.get("n").asInstanceOf[Long]
-  }
-
   private def commit(spark: SparkSession, stateDir: String, id: Long): Unit = {
     val f = fs(spark, stateDir)
     f.mkdirs(new Path(s"$stateDir/_commits"))
@@ -269,22 +256,20 @@ object IncrementalDedup {
     }
   }
 
-  /** @param batchId streaming micro-batch id for exactly-once replay
+  /** Every state write is a [[Counted.write]]: the lineage rows and the
+    * [[BatchResult]] come from what the writes observed, never from a
+    * follow-up job over the written partitions.
+    *
+    * @param batchId streaming micro-batch id for exactly-once replay
     *        detection; pass -1 (default) to auto-assign the next id for
     *        direct/batch callers.
-    * @param collectStats when false, skip the pure-REPORTING driver actions
-    *        (new-pair / total-doc / suffix-pair counts — 3 extra jobs per
-    *        batch on the measured 8–10 s fixed-cost floor) and return -1
-    *        sentinels in [[BatchResult]]; state writes, prune-bound counts
-    *        and lineage are unaffected.
     */
   def processBatch(
       spark: SparkSession,
       corpusBatch: DataFrame,
       stateDir: String,
       cfg: DedupConfig = DedupConfig.default,
-      batchId: Long = -1L,
-      collectStats: Boolean = true): BatchResult = {
+      batchId: Long = -1L): BatchResult = {
     val tBatch0 = System.nanoTime()
     val id = if (batchId >= 0) batchId else nextBatchId(spark, stateDir)
     // a compacted-away id must fail LOUDLY: committing fresh docs under an
@@ -301,14 +286,8 @@ object IncrementalDedup {
           "a recreated stream checkpoint cannot reuse compacted-away ids")
     }
     val done = liveIds(markers)
-    if (done.contains(id)) {
-      // replayed batch: state already reflects it. The docs count is pure
-      // reporting — a collectStats=false stream replay must not pay an
-      // O(state) count job for a sentinel nobody reads.
-      return BatchResult(0L,
-        if (!collectStats) -1L
-        else readState(spark, stateDir, "docs", done).map(_.count()).getOrElse(0L))
-    }
+    // replayed batch: state already reflects it, and nothing is read
+    if (done.contains(id)) return BatchResult(0L, 0L)
 
     val docsOld = readState(spark, stateDir, "docs", done)
       .map(_.select("doc_id", "content_sha256"))
@@ -318,7 +297,7 @@ object IncrementalDedup {
     // plans cached in the session, one more set per retry
     val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def persisted(df: DataFrame): DataFrame = { cached += df.persist(); df }
-    val (nNew, newSfxPairs) = try {
+    val (written, result) = try {
       // genuinely-new docs only: replay/re-ingest of a known doc_id must not
       // duplicate state rows. Both anti-joins below are phrased as "prune
       // the O(corpus) accumulated side down to the batch's hits first" — the
@@ -338,7 +317,7 @@ object IncrementalDedup {
       // semi-join sooner); the key-level prunes take theirs from the key
       // write's observation. Counting t1Raw unconditionally (the first batch
       // included) also materializes the cache every chain reads.
-      val nRaw = timed("nRaw.count")(t1Raw.count())
+      val nRaw = t1Raw.count()
       val t1New = docsOld match {
         case Some(old) =>
           val oldIdHit = prune(old.select("doc_id"),
@@ -352,8 +331,7 @@ object IncrementalDedup {
       // the concurrent chains keeps their first actions from racing to
       // compute t1New's prune subtree 3–4× in parallel — duplicated upstream
       // shuffle reads that the flat-shuffle guarantee (StreamingSpec) counts
-      val nNew = timed("docs.write")(writeCounted(t1New.select("doc_id", "content_sha256"),
-        s"$stateDir/docs/batch=$id"))
+      val nNew = Counted.write(t1New.select("doc_id", "content_sha256"), s"$stateDir/docs/batch=$id")
 
       // First carrier per previously-unseen sha (min doc_id within the
       // batch) — the only docs that enter LSH/suffix state. Docs whose sha
@@ -377,40 +355,28 @@ object IncrementalDedup {
       // would each re-run its sha-group shuffle (the duplicated shuffle
       // reads would also be charged against StreamingSpec's flat-shuffle
       // budget)
-      timed("reps.count")(repsNew.count()): Unit
+      repsNew.count(): Unit
 
       // The three state-building chains are INDEPENDENT until the commit
       // marker (disjoint tables: each keyed index's four vs exact_pairs) —
       // run them concurrently so their fixed per-job costs overlap (the
       // measured 8–10 s/batch floor was ~17 SEQUENTIAL driver-coordinated
       // jobs).
-      val results = inParallel(spark.sparkContext, Seq[(String, () => Long)](
-        "lsh" -> (() => { increment(Lsh, spark, stateDir, repsNew, done, id, cfg); 0L }),
-        "suffix" -> (() => {
-          increment(Suffix, spark, stateDir, repsNew, done, id, cfg)
-          if (!collectStats) -1L
-          else readParquet(spark, s"$stateDir/${Suffix.pairs}/batch=$id")
-            .select("a", "b").distinct().count()
-        }),
-        "exact" -> (() => { exactIncrement(spark, stateDir, t1New, docsOld, nRaw, id); 0L })
+      val Seq(lsh, sfx, exact) = inParallel(spark.sparkContext, Seq[(String, () => ChainOut)](
+        "lsh" -> (() => increment(Lsh, spark, stateDir, repsNew, done, id, cfg)),
+        "suffix" -> (() => increment(Suffix, spark, stateDir, repsNew, done, id, cfg)),
+        "exact" -> (() => exactIncrement(spark, stateDir, t1New, docsOld, nRaw, id))
       ))
-      (nNew, results(1))
+      // LSH pairs join reps of distinct shas and exact edges join docs of
+      // one sha, so the two sets are disjoint and their counts add
+      (lsh.rows ++ sfx.rows ++ exact.rows + ("docs" -> nNew),
+        BatchResult(lsh.newPairs + exact.newPairs, sfx.newPairs))
     } finally cached.foreach(_.unpersist(blocking = false))
 
-    val newPairCount =
-      if (!collectStats) -1L
-      else readParquet(spark, s"$stateDir/lsh_pairs/batch=$id").select("a", "b")
-        .unionByName(readParquet(spark, s"$stateDir/exact_pairs/batch=$id"))
-        .distinct().count()
-
     commit(spark, stateDir, id)
-    timed("lineage")(recordBatchLineage(spark, stateDir, s"batch=$id", s"incr-$id", cfg.fingerprint,
-      (System.nanoTime() - tBatch0) / 1000000L, docRows = nNew))
-    val totalDocs =
-      if (!collectStats) -1L
-      else readState(spark, stateDir, "docs", done, alsoBatch = id)
-        .map(_.count()).getOrElse(0L)
-    BatchResult(newPairCount, totalDocs, newSfxPairs)
+    recordBatchLineage(spark, stateDir, s"batch=$id", s"incr-$id", cfg.fingerprint,
+      (System.nanoTime() - tBatch0) / 1000000L, written)
+    result
   }
 
   /** One keyed index of the incremental state: per-rep `rows`, the
@@ -460,31 +426,11 @@ object IncrementalDedup {
     Seq("fp"), _.suffixDfMax,
     ("toks.write", "grams.write", "gcounts.write", "sfx.pairs"),
     head = (reps, cfg) => {
-      val spark = reps.sparkSession
-      import spark.implicits._
-      val minLen = cfg.suffixMinLen
-      val toks = graft.suffix.SuffixPass.tokenDocs(spark, reps, cfg)
-        .filter(_.tokens.length >= minLen) // can't hold a minLen run otherwise
-        .toDF()
-      (toks, toks.select(col("doc_id"), col("tokens")).as[(Long, Array[Long])]
-        .flatMap { case (d, tk) => graft.suffix.SuffixPass.indexFps(tk, cfg).map(fp => (fp, d)) }
-        .toDF("fp", "doc_id"))
+      val (toks, fps) = graft.suffix.SuffixPass.indexRows(reps.sparkSession, reps, cfg)
+      (toks.toDF(), fps)
     },
-    verify = (prov, toks, cfg) => {
-      val spark = prov.sparkSession
-      import spark.implicits._
-      val minLen = cfg.suffixMinLen
-      prov.select("a", "b").distinct()
-        .join(toks.select(col("doc_id").as("a"), col("tokens").as("ta")), "a")
-        .join(toks.select(col("doc_id").as("b"), col("tokens").as("tb")), "b")
-        .select(col("a"), col("b"), col("ta"), col("tb"))
-        .as[(Long, Long, Array[Long], Array[Long])]
-        .mapPartitions(_.flatMap { case (a, b, tA, tB) =>
-          if (graft.suffix.SuffixArrays.commonRunAtLeast(tA, tB, minLen) >= minLen) Some((a, b))
-          else None
-        })
-        .toDF("a", "b")
-    })
+    verify = (prov, toks, cfg) => graft.suffix.SuffixPass.verifyRuns(
+      prov.select("a", "b").distinct(), toks, cfg.suffixMinLen).select("a", "b"))
 
   private val Indexes = Seq(Lsh, Suffix)
 
@@ -505,7 +451,9 @@ object IncrementalDedup {
     * key-row state under the running cap, verify, and append the verified
     * pairs with key provenance. Each index touches only its own four
     * tables, so processBatch runs the two (and the exact chain)
-    * concurrently.
+    * concurrently. Returns the rows each write observed and the verified
+    * pair count, observed where the pair write consumes the verified frame
+    * (one row per (a, b), each one joining its provenance rows).
     *
     * Execution strategy (state rows unchanged): the counts write does not
     * serialize the candidate path — the prune plans read `committed count
@@ -521,7 +469,7 @@ object IncrementalDedup {
     * (max(rows, key rows) write → provenance count → pair write).
     */
   private def increment(ix: KeyedIndex, spark: SparkSession, stateDir: String,
-      repsNew: DataFrame, done: Seq[Long], id: Long, cfg: DedupConfig): Unit = {
+      repsNew: DataFrame, done: Seq[Long], id: Long, cfg: DedupConfig): ChainOut = {
     val (rowsJob, keyRowsJob, countsJob, pairsJob) = ix.jobs
     def partition(table: String) = s"$stateDir/$table/batch=$id"
     def accumulated(table: String) = readState(spark, stateDir, table, done, alsoBatch = id).get
@@ -531,16 +479,17 @@ object IncrementalDedup {
     // the key-row count rides the key write's observation (gram keys scale
     // with TOKENS, not docs, and a follow-up count job is a job the fixed
     // floor can't spare); it bounds the row count of every pruned key side
-    val nKeyRows = inParallel(spark.sparkContext, Seq[(String, () => Long)](
-      rowsJob -> (() => { timed(rowsJob)(rowsNew
-        .write.mode("overwrite").parquet(partition(ix.rows))); 0L }),
-      keyRowsJob -> (() => timed(keyRowsJob)(writeCounted(keyRowsNew, partition(ix.keyRows))))))(1)
+    val Seq(nRows, nKeyRows) = inParallel(spark.sparkContext, Seq[(String, () => Long)](
+      rowsJob -> (() => Counted.write(rowsNew, partition(ix.rows))),
+      keyRowsJob -> (() => Counted.write(keyRowsNew, partition(ix.keyRows)))))
     val keyRowsD = readParquet(spark, partition(ix.keyRows)).select(keyDocCols: _*)
     val countsNew = keyRowsD.groupBy(keyCols: _*).agg(count(lit(1)).as("cnt"))
 
-    inParallel(spark.sparkContext, Seq[(String, () => Unit)](
-      countsJob -> (() => timed(countsJob)(countsNew
-        .write.mode("overwrite").parquet(partition(ix.counts)))),
+    // (rows written, verified pairs) of each job; the counts write has no
+    // pairs
+    val Seq((nCounts, _), (nPairs, nVerified)) = inParallel(spark.sparkContext,
+      Seq[(String, () => (Long, Long))](
+      countsJob -> (() => (Counted.write(countsNew, partition(ix.counts)), 0L)),
       pairsJob -> (() => {
         // committed counts ∪ recount of the written key-row partition — the
         // counts write above need not finish before this plan runs
@@ -566,25 +515,27 @@ object IncrementalDedup {
           .distinct()
           .persist()
         try {
-          val nProv = timed(s"${ix.pairs}.prov")(prov.count())
+          val nProv = prov.count()
           // verify against endpoint-pruned rows: candidates touch ≤ 2·|prov|
           // docs, so the O(corpus) row state stays out of the verify joins
           val ends = prov.select(col("a").as("doc_id"))
             .unionByName(prov.select(col("b").as("doc_id"))).distinct()
-          val verified = ix.verify(prov,
-            prune(accumulated(ix.rows), ends, Seq("doc_id"), 2 * nProv, "left_semi"), cfg)
-          timed(s"${ix.pairs}.write")(prov.join(verified, Seq("a", "b"))
-            .write.mode("overwrite").parquet(partition(ix.pairs)))
+          val verified = Counted(ix.verify(prov,
+            prune(accumulated(ix.rows), ends, Seq("doc_id"), 2 * nProv, "left_semi"), cfg))
+          (Counted.write(prov.join(verified.frame, Seq("a", "b")), partition(ix.pairs)), verified.rows)
         } finally prov.unpersist(blocking = false)
       })))
+    ChainOut(Map(ix.rows -> nRows, ix.keyRows -> nKeyRows, ix.counts -> nCounts,
+      ix.pairs -> nPairs), nVerified)
   }
 
   /** Exact-dup chain of one micro-batch: within-batch star + one cross-batch
     * glue edge per sha (see the object scaladoc — O(k) edges per sha group,
-    * never a new×all-old join). Touches only `exact_pairs`.
+    * never a new×all-old join). Touches only `exact_pairs`; every edge it
+    * writes is a distinct new pair.
     */
   private def exactIncrement(spark: SparkSession, stateDir: String,
-      t1New: DataFrame, docsOld: Option[DataFrame], nNew: Long, id: Long): Unit = {
+      t1New: DataFrame, docsOld: Option[DataFrame], nNew: Long, id: Long): ChainOut = {
     val newMin = t1New.groupBy("content_sha256").agg(min("doc_id").as("nm"))
     val withinBatch = t1New.select(col("content_sha256"), col("doc_id"))
       .join(newMin, "content_sha256")
@@ -599,34 +550,30 @@ object IncrementalDedup {
           .select(least(col("nm"), col("pr")).as("a"), greatest(col("nm"), col("pr")).as("b"))
       case None => withinBatch.limit(0)
     }
-    timed("exact.write")(withinBatch.unionByName(glue)
-      .write.mode("overwrite").parquet(s"$stateDir/exact_pairs/batch=$id"))
+    val n = Counted.write(withinBatch.unionByName(glue), s"$stateDir/exact_pairs/batch=$id")
+    ChainOut(Map("exact_pairs" -> n), n)
   }
 
   /** One lineage row per state table per committed batch / compaction
     * generation (north rule: "checkpoint every stage ... with per-partition
     * lineage and metrics") — appended to `stage_meta` in the
     * [[graft.io.StageMeta.MetaRow]] schema so the batch CLI's lineage
-    * readers work unchanged on a stream's state dir. Byte sizes come from
-    * the FS listing (free); the row count is recorded where the batch
-    * already knows it (`docs`) and left NULL otherwise — deliberately no
-    * extra count jobs on the per-batch hot path, whose measured 8–10 s
-    * fixed cost is driver-action-bound.
+    * readers work unchanged on a stream's state dir. `rows` holds the
+    * count each table's write observed (one entry per table written to
+    * `partition`); byte sizes come from the FS listing (free).
     */
   private def recordBatchLineage(spark: SparkSession, stateDir: String,
       partition: String, runId: String, fingerprint: String, wallMs: Long,
-      docRows: Long): Unit = {
+      rows: Map[String, Long]): Unit = {
     val f = fs(spark, stateDir)
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val rows = StateTables.flatMap { t =>
-      val p = new Path(s"$stateDir/$t/$partition")
-      if (!f.exists(p)) None
-      else Some(graft.io.StageMeta.MetaRow(runId, t, partition,
-        if (t == "docs" && docRows >= 0) Some(docRows) else None,
-        f.getContentSummary(p).getLength, fingerprint, wallMs, now))
-    }
-    if (rows.nonEmpty)
-      spark.createDataFrame(rows).write.mode("append").parquet(s"$stateDir/stage_meta")
+    val lineage = StateTables.flatMap(t => rows.get(t).map { n =>
+      graft.io.StageMeta.MetaRow(runId, t, partition, Some(n),
+        f.getContentSummary(new Path(s"$stateDir/$t/$partition")).getLength,
+        fingerprint, wallMs, now)
+    })
+    if (lineage.nonEmpty)
+      spark.createDataFrame(lineage).write.mode("append").parquet(s"$stateDir/stage_meta")
   }
 
   private val StateTables = "docs" +:
@@ -695,10 +642,9 @@ object IncrementalDedup {
     // (count tables re-aggregate to one row per key; every other table is
     // the plain union, minus the partition-discovery column)
     val countKeys = Indexes.map(ix => ix.counts -> ix.keys).toMap
-    inParallel(spark.sparkContext, StateTables.map { t => t -> { () =>
-      readState(spark, stateDir, t, ids).foreach { df =>
-        countKeys.get(t).fold(df.drop("batch"))(sumCounts(df, _))
-          .write.mode("overwrite").parquet(s"$tmpRoot/$t")
+    val staged = inParallel(spark.sparkContext, StateTables.map { t => t -> { () =>
+      readState(spark, stateDir, t, ids).map { df =>
+        Counted.write(countKeys.get(t).fold(df.drop("batch"))(sumCounts(df, _)), s"$tmpRoot/$t")
       }
     }})
     if (failBeforeMarker) return
@@ -717,7 +663,8 @@ object IncrementalDedup {
     f.create(new Path(s"$stateDir/_commits/base-$gen-$upto"), true).close()
     f.delete(new Path(tmpRoot), true)
     recordBatchLineage(spark, stateDir, s"batch=-$gen", s"incr-compact-$gen",
-      s"compact-upto-$upto", (System.nanoTime() - tComp0) / 1000000L, docRows = -1L)
+      s"compact-upto-$upto", (System.nanoTime() - tComp0) / 1000000L,
+      StateTables.zip(staged).collect { case (t, Some(n)) => t -> n }.toMap)
 
     // Cleanup sweeps EVERYTHING the new base supersedes — not just this
     // run's `regs`/`base` lists — so orphans from a previous crash
@@ -770,9 +717,6 @@ object IncrementalDedup {
     }
 
   /** Accumulated exact-duplicate edges (within-batch stars + glue edges). */
-  def exactEdges(spark: SparkSession, stateDir: String): DataFrame =
-    exactEdgesOf(spark, stateDir, committedIds(spark, stateDir))
-
   private def exactEdgesOf(spark: SparkSession, stateDir: String,
       committed: Seq[Long]): DataFrame =
     readState(spark, stateDir, "exact_pairs", committed)

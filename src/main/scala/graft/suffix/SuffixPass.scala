@@ -117,19 +117,48 @@ object SuffixPass {
       }
   }
 
+  /** The index head shared by the batch and incremental passes: docs →
+    * (their token streams long enough to hold a minLen run, the index
+    * fingerprint rows (fp, doc_id) of those streams).
+    */
+  def indexRows(spark: SparkSession, docs: DataFrame,
+      cfg: DedupConfig): (Dataset[TokenDoc], DataFrame) = {
+    import spark.implicits._
+    val toks = tokenDocs(spark, docs, cfg)
+      .filter(_.tokens.length >= cfg.suffixMinLen) // can't hold a minLen run otherwise
+    (toks, toks.flatMap(d => indexFps(d.tokens, cfg).map(fp => (fp, d.doc_id))).toDF("fp", "doc_id"))
+  }
+
+  /** The verify step shared by the batch and incremental passes: candidate
+    * pairs (a, b) → those whose token streams (from `toks`: doc_id, tokens)
+    * share a run of ≥ minLen tokens, as (a, b, shared_len). The decision is
+    * exact and O(n), with the suffix array only as the hash-collision
+    * fallback (see [[SuffixArrays.commonRunAtLeast]]); shared_len is a
+    * witness run length ≥ minLen, not necessarily the global maximum (no
+    * consumer needs the max; the pipeline gates on ≥ minLen).
+    */
+  def verifyRuns(cands: DataFrame, toks: DataFrame, minLen: Int): DataFrame = {
+    val spark = cands.sparkSession
+    import spark.implicits._
+    cands.join(toks.select(col("doc_id").as("a"), col("tokens").as("toks_a")), "a")
+      .join(toks.select(col("doc_id").as("b"), col("tokens").as("toks_b")), "b")
+      .select(col("a"), col("b"), col("toks_a"), col("toks_b"))
+      .as[(Long, Long, Array[Long], Array[Long])]
+      .mapPartitions(_.flatMap { case (a, b, tA, tB) =>
+        val len = SuffixArrays.commonRunAtLeast(tA, tB, minLen)
+        if (len >= minLen) Some((a, b, len)) else None
+      })
+      .toDF("a", "b", "shared_len")
+  }
+
   /** Full pass: docs (doc_id, lang, content) → verified containment pairs
     * (a, b, shared_len, src='suffix').
     */
   def containmentPairs(spark: SparkSession, docs: DataFrame, cfg: DedupConfig): DataFrame = {
     import spark.implicits._
     val dfMax = cfg.suffixDfMax
-    val minLen = cfg.suffixMinLen
 
-    val toks = tokenDocs(spark, docs, cfg)
-      .filter(_.tokens.length >= cfg.suffixMinLen) // can't hold a minLen run otherwise
-
-    val fps = toks.flatMap(d => indexFps(d.tokens, cfg).map(fp => (fp, d.doc_id)))
-      .toDF("fp", "doc_id")
+    val (toks, fps) = indexRows(spark, docs, cfg)
 
     // Size the gram exchange by BYTES, not core count (round-5 finding,
     // promoted from the bench env knob into the engine): with partitions
@@ -266,33 +295,18 @@ object SuffixPass {
       // closure; eager=false only avoids the extra final count job.
       .localCheckpoint(false)
 
-    // Attach both token streams and run the per-pair suffix-array kernel.
+    // Attach both token streams and run the per-pair verify kernel.
     // The token state is endpoint-pruned first (same discipline as the
     // incremental path): only docs that appear in a candidate pair need
     // their streams in the join — at 100 TB the full token table is the
     // corpus itself and must stay out of the exchange. Checkpointed for
-    // the same reason as cands (ta and tb would otherwise re-tokenize).
+    // the same reason as cands (both verify joins would otherwise
+    // re-tokenize).
     val ends = cands.select(col("a").as("doc_id"))
       .unionByName(cands.select(col("b").as("doc_id"))).distinct()
     val toksC = toks.toDF().join(ends, Seq("doc_id"), "left_semi")
       .localCheckpoint(false)
-    val ta = toksC.select(col("doc_id").as("a"), col("tokens").as("toks_a"))
-    val tb = toksC.select(col("doc_id").as("b"), col("tokens").as("toks_b"))
-    cands.join(ta, "a").join(tb, "b")
-      .select(col("a"), col("b"), col("toks_a"), col("toks_b"))
-      .as[(Long, Long, Array[Long], Array[Long])]
-      .mapPartitions { it =>
-        it.flatMap { case (a, b, tA, tB) =>
-          // exact O(n) decision + witness; SA only on hash-collision
-          // fallback (see SuffixArrays.commonRunAtLeast scaladoc).
-          // shared_len is a witness run length ≥ minLen, not necessarily
-          // the global maximum (no consumer needs the max; the pipeline
-          // gates on ≥ minLen).
-          val len = SuffixArrays.commonRunAtLeast(tA, tB, cfg.suffixMinLen)
-          if (len >= cfg.suffixMinLen) Some((a, b, len)) else None
-        }
-      }
-      .toDF("a", "b", "shared_len")
+    verifyRuns(cands, toksC, cfg.suffixMinLen)
       .withColumn("src", lit("suffix"))
   }
 }

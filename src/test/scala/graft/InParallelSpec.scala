@@ -50,7 +50,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
     * await so that a runner ignoring the timeout fails instead of hanging.
     * @return the failure `inParallel` raised and the seconds it took
     */
-  private def timedOut(timeoutMin: String)(f: => Any): (Throwable, Double) = {
+  private def underTimeout(timeoutMin: String)(f: => Any): (Throwable, Double) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     sys.props("graft.chainTimeoutMin") = timeoutMin
@@ -62,7 +62,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("one deadline: three wedged chains fail within one timeout, not three") {
-    val (e, secs) = timedOut("0.05") { // 3 s
+    val (e, secs) = underTimeout("0.05") { // 3 s
       IncrementalDedup.inParallel[Long](spark.sparkContext,
         (1 to 3).map(i => s"wedged-$i" -> (() => { Thread.sleep(15000); 0L })))
     }
@@ -72,7 +72,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
 
   test("a chain stuck outside Spark is interrupted once the call fails") {
     val interrupted = new java.util.concurrent.CountDownLatch(1)
-    timedOut("0.05") {
+    underTimeout("0.05") {
       IncrementalDedup.inParallel[Long](spark.sparkContext, Seq("sleeper" -> (() => {
         try Thread.sleep(15000)
         catch { case _: InterruptedException => interrupted.countDown() }
@@ -101,7 +101,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
     }
     sc.addSparkListener(listener)
     try {
-      timedOut("0.05") {
+      underTimeout("0.05") {
         IncrementalDedup.inParallel[Long](sc, Seq("nest-outer" -> (() => {
           sc.parallelize(1 to 4, 1).count()
           IncrementalDedup.inParallel[Long](sc, Seq("nest-inner" -> (() =>

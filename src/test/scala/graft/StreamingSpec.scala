@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.conf.DedupConfig
@@ -23,11 +25,24 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   test("3 incremental batches == one batch run (pairs and clusters)") {
     val stateDir = Files.createTempDirectory("graft-stream").toString
     val parts = corpus.grouped((corpus.size + 2) / 3).toSeq
-    parts.foreach { chunk =>
+    val results = parts.map { chunk =>
       IncrementalDedup.processBatch(spark,
         spark.createDataFrame(chunk).select("repo", "path", "commit", "lang", "content"),
         stateDir, cfg)
     }
+    // the counts a batch reports ride its writes: they equal a recount of
+    // the distinct (a, b) its partitions hold
+    def distinctPairsByBatch(tables: String*): Map[Long, Long] =
+      tables.map(t => spark.read.parquet(s"$stateDir/$t").select("batch", "a", "b"))
+        .reduce(_ unionByName _).distinct()
+        .groupBy("batch").count().as[(Long, Long)].collect().toMap.withDefaultValue(0L)
+    val lshOrExact = distinctPairsByBatch("lsh_pairs", "exact_pairs")
+    val sfx = distinctPairsByBatch("sfx_pairs")
+    results.zipWithIndex.foreach { case (r, i) =>
+      assert(r.newPairs === lshOrExact(i.toLong), s"batch $i newPairs")
+      assert(r.newSuffixPairs === sfx(i.toLong), s"batch $i newSuffixPairs")
+    }
+    assert(results.map(_.newPairs).sum > 0L, "scenario produced no pairs")
 
     // append-only state: each micro-batch wrote ONLY its own partition —
     // per-batch write volume ∝ batch size, never O(corpus-so-far)
@@ -44,12 +59,17 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         s"batch $i band partition larger than its own docs' bands")
     }
 
-    // replaying a committed batch id is a no-op (exactly-once marker)
+    // replaying a committed batch id is a no-op (exactly-once marker) that
+    // runs no Spark job
     val before = IncrementalDedup.edges(spark, stateDir, cfg).count()
-    val replay = IncrementalDedup.processBatch(spark,
-      spark.createDataFrame(parts.head).select("repo", "path", "commit", "lang", "content"),
-      stateDir, cfg, batchId = 0L)
-    assert(replay.newPairs === 0L)
+    val replayInput =
+      spark.createDataFrame(parts.head).select("repo", "path", "commit", "lang", "content")
+    val replayJobs = new AtomicInteger()
+    val replay = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = replayJobs.incrementAndGet(): Unit
+    })(IncrementalDedup.processBatch(spark, replayInput, stateDir, cfg, batchId = 0L))
+    assert(replay === IncrementalDedup.BatchResult(0L, 0L))
+    assert(replayJobs.get === 0, s"the replay ran ${replayJobs.get} Spark jobs")
     assert(IncrementalDedup.edges(spark, stateDir, cfg).count() === before)
 
     // re-ingesting known docs under a FRESH batch id is also a no-op for
@@ -96,23 +116,34 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(incClusters === batchClusters)
 
     // per-batch lineage: every committed batch leaves one stage_meta row per
-    // state table (wall/bytes/config fingerprint), docs rows carry the
-    // batch's doc count — a long-running stream's history is queryable, not
-    // only in Spark logs
+    // state table (rows/wall/bytes/config fingerprint), each row count the
+    // one its write observed — a long-running stream's history is
+    // queryable, not only in Spark logs
     val meta = spark.read.parquet(s"$stateDir/stage_meta")
       .select($"run_id", $"stage", $"rows", $"bytes", $"input_fingerprint", $"wall_ms")
       .as[(String, String, Option[Long], Long, String, Long)].collect()
+    val partitionRows = rowsByPartition(stateDir)
     (0 to 2).foreach { b =>
       val rows = meta.filter(_._1 == s"incr-$b")
-      assert(rows.map(_._2).toSet.intersect(
-        Set("docs", "signatures", "bands", "band_counts", "lsh_pairs", "exact_pairs"))
-        .size === 6, s"batch $b missing lineage tables: ${rows.map(_._2).toSeq}")
-      val docsRow = rows.find(_._2 == "docs").get
-      assert(docsRow._3 === Some(parts(b).size.toLong), s"batch $b docs row count")
-      assert(docsRow._4 > 0L && docsRow._6 > 0L, "bytes/wall must be recorded")
+      assert(rows.map(_._2).toSet === StateTables, s"batch $b lineage tables: ${rows.map(_._2).toSeq}")
+      rows.foreach { r =>
+        assert(r._3 === Some(partitionRows((r._2, b.toLong))), s"batch $b ${r._2} row count")
+      }
+      assert(rows.find(_._2 == "docs").get._3 === Some(parts(b).size.toLong), s"batch $b docs")
+      assert(rows.forall(r => r._4 > 0L && r._6 > 0L), "bytes/wall must be recorded")
       assert(rows.forall(_._5 == cfg.fingerprint), "config fingerprint stamped")
     }
   }
+
+  private val StateTables = Set("docs", "signatures", "bands", "band_counts", "lsh_pairs",
+    "toks", "grams", "gram_counts", "sfx_pairs", "exact_pairs")
+
+  /** Rows per (state table, batch partition) of a state dir. */
+  private def rowsByPartition(stateDir: String): Map[(String, Long), Long] =
+    StateTables.toSeq.flatMap { t =>
+      spark.read.parquet(s"$stateDir/$t").groupBy("batch").count().as[(Long, Long)].collect()
+        .map { case (b, n) => (t, b) -> n }
+    }.toMap.withDefaultValue(0L)
 
   test("incremental suffix pass: containment found across batches; retroactive df-cap") {
     // doc 0 (batch A) is contained verbatim in doc 1 (batch B) — the pair
@@ -177,7 +208,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // that saw its own half-written docs would overwrite the partitions
     // with empty data and lose the batch)
     val r2 = IncrementalDedup.processBatch(spark, df(parts(1)), stateDir, cfg, batchId = 1L)
-    assert(r2.totalDocs === corpus.size.toLong, "replay lost batch docs")
+    assert(IncrementalDedup.clusters(spark, stateDir, cfg).count() === corpus.size.toLong,
+      "replay lost batch docs")
     assert(r2.newPairs === r1.newPairs, "replay changed the emitted pair set")
     val docs1 = spark.read.parquet(s"$stateDir/docs/batch=1").count()
     assert(docs1 === parts(1).size.toLong, "batch-1 partition was wiped by the replay")
@@ -300,9 +332,16 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .as[(Long, Long)].collect().toSet === edgesBefore)
     assert(IncrementalDedup.clusters(spark, stateDir, cfg)
       .as[(Long, Long)].collect().toMap === clustersBefore)
-    // the compaction itself leaves lineage rows for the new base partition
-    assert(spark.read.parquet(s"$stateDir/stage_meta")
-      .where($"run_id" === "incr-compact-1" && $"stage" === "docs").count() === 1L)
+    // the compaction itself leaves lineage rows for the new base partition,
+    // one per state table, each with the rows its staging write observed
+    val compactMeta = spark.read.parquet(s"$stateDir/stage_meta")
+      .where($"run_id" === "incr-compact-1").select($"stage", $"rows")
+      .as[(String, Option[Long])].collect()
+    assert(compactMeta.map(_._1).sorted.toSeq === StateTables.toSeq.sorted)
+    val baseRows = rowsByPartition(stateDir)
+    compactMeta.foreach { case (t, n) =>
+      assert(n === Some(baseRows((t, -1L))), s"compaction lineage rows of $t")
+    }
 
     // a streaming replay of the NEWEST epoch (id 2) after compaction is a
     // committed-marker no-op — not a superseded-id crash
