@@ -77,7 +77,8 @@ object Dedup {
       */
     def write(name: String, df: DataFrame, wallMs: => Long): Unit = {
       val rows = cat.write(df, name)
-      StageMeta.record(spark, cat, runId, name, chainFp, wallMs, rows)
+      StageMeta.append(spark, cat.location(StageMeta.StageMetaDir),
+        StageMeta.stageRows(spark, cat, runId, name, chainFp, wallMs, rows))
     }
 
     val staged = new DedupPipeline.Executor {
@@ -132,12 +133,8 @@ object Dedup {
     // Accept either the canonical corpus schema (input_hint) or the driver's
     // documents shape, mapped per FIXTURES.md §4.
     val corpus =
-      if (raw.columns.contains("repo"))
-        raw.select("repo", "path", "commit", "lang", "content")
-      else
-        raw.select(col("source").as("repo"),
-          concat(lit("doc/"), col("doc_id")).as("path"), lit("v0").as("commit"),
-          col("lang"), col("text").as("content"))
+      if (raw.columns.contains("repo")) raw.select(ingest.Ingest.CorpusCols.map(col): _*)
+      else ingest.Ingest.documentsToCorpus(raw)
     // Small inputs arrive as a handful of parquet files; spread them so the
     // ingest/signature kernels parallelize (no-op cost at real scale, where
     // the scan already yields thousands of partitions).

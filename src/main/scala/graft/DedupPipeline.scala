@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.conf.DedupConfig
 import graft.kernel.SignatureKernel
@@ -12,7 +14,9 @@ import graft.model.DocRow
   * bands → candidate_pairs → verified_pairs → clusters → cluster_stats) and
   * run by one of two [[Executor]]s:
   *  - [[run]]: lazy and in-session — stages are persisted DataFrames and the
-  *    suffix pass runs on its own thread;
+  *    suffix pass runs as a named chain ([[Chains]]) under the engine's one
+  *    chain deadline; a failed run cancels that chain and frees every frame
+  *    it persisted before the error propagates;
   *  - [[graft.Dedup.run]]: staged — every stage is written to a catalog,
   *    read back, and reused on resume by chain fingerprint.
   * SparkEntry.queries exposes individual stages of [[run]] for the driver's
@@ -29,16 +33,15 @@ object DedupPipeline {
       verifiedPairs: DataFrame,
       clusters: DataFrame,
       clusterStats: DataFrame,
-      stopBands: DataFrame) {
-    /** Drop the pipeline-owned cached stages — one-shot callers
-      * (benchmarks, repeated run() in one session) must release or the
-      * multi-million-row pair caches pin executor memory for the session's
-      * life. `t1` is caller-provided (run() persists the caller's handle)
-      * and stays cached for the caller to manage.
+      stopBands: DataFrame,
+      persisted: Seq[DataFrame] = Nil) {
+    /** Drop every frame [[run]] persisted — one-shot callers (benchmarks,
+      * repeated run() in one session) must release or the multi-million-row
+      * pair caches pin executor memory for the session's life. A frame the
+      * caller had cached before the run (say its own `t1`) is not on the
+      * list and stays cached for the caller to manage.
       */
-    def release(): Unit =
-      Seq(t1Distinct, signatures, bands, candidatePairs, verifiedPairs, clusters)
-        .foreach(_.unpersist(blocking = false))
+    def release(): Unit = persisted.foreach(_.unpersist(blocking = false))
   }
 
   /** How [[compose]] materializes its stages. */
@@ -160,43 +163,51 @@ object DedupPipeline {
     * inside run(): t1Distinct before the suffix fork (both
     * branches read it, and two cold racers would otherwise each run the
     * ingest + sha-distinct shuffles), and bands while the suffix pass runs.
+    *
+    * A run that throws leaves nothing behind: the suffix chain is cancelled
+    * (its Spark jobs, running and future, then its thread) and every frame
+    * the run persisted is released before the error propagates.
     */
-  def run(spark: SparkSession, t1in: DataFrame, cfg: DedupConfig = DedupConfig.default): Result =
-    compose(spark, t1in, cfg, new InSession)
+  def run(spark: SparkSession, t1in: DataFrame, cfg: DedupConfig = DedupConfig.default): Result = {
+    val ex = new InSession(spark.sparkContext)
+    try compose(spark, t1in, cfg, ex).copy(persisted = ex.persisted.toList)
+    catch { case e: Throwable => ex.abort(); throw e }
+  }
 
   /** Persisting executor. The suffix pass materializes its candidate table
     * EAGERLY at call time (localCheckpoint under AQE — see SuffixPass), so
-    * it runs on its own thread; the fork and the join each first
+    * it runs as a chain of its own; the fork and the join each first
     * materialize the newest persisted stage, so the wait is spent on the
     * caches every later action needs anyway — work moved earlier, not
-    * added.
+    * added. The join rethrows the pass's own exception.
     */
-  private final class InSession extends Executor {
+  private final class InSession(sc: SparkContext) extends Executor {
     private var newest: DataFrame = _
+    private var suffix: Option[Chains.Running[DataFrame]] = None
+    /** Every frame this run persisted; one the caller had already cached is
+      * not this run's to free.
+      */
+    val persisted = scala.collection.mutable.ListBuffer.empty[DataFrame]
 
     def stage(name: String)(build: => DataFrame): DataFrame = {
       val df = build
-      if (name == "cluster_stats") df
-      else { newest = df.persist(); newest }
+      if (name != "cluster_stats") {
+        if (df.storageLevel == StorageLevel.NONE) persisted += df.persist()
+        newest = df
+      }
+      df
     }
 
     def stopBands(log: DataFrame): Unit = ()
 
     def fork(pass: => DataFrame): () => DataFrame = {
       newest.count(): Unit
-      val out = new java.util.concurrent.CompletableFuture[DataFrame]()
-      val th = new Thread(() =>
-        try out.complete(pass)
-        catch { case e: Throwable => out.completeExceptionally(e) },
-        "graft-suffix-pass")
-      th.setDaemon(true)
-      th.start()
-      () => {
-        newest.count(): Unit
-        try out.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
+      suffix = Some(Chains.start(sc, "pipeline", Seq("suffix" -> (() => pass))))
+      () => { newest.count(): Unit; suffix.get.join().head._2.get }
     }
+
+    /** After a failed [[compose]]: stop the suffix chain, then free. */
+    def abort(): Unit = { suffix.foreach(_.cancel()); persisted.foreach(_.unpersist(blocking = false)) }
   }
 
   /** First-story / novelty detection — the reference's headline capability

@@ -31,30 +31,37 @@ object StageMeta {
       wall_ms: Long,
       ts: java.sql.Timestamp)
 
-  /** Record lineage for a stage that was just written to `catalog`:
+  /** The one lineage writer of both engines: appends `rows` to the
+    * stage_meta table at `metaDir`. Each engine builds its own rows and
+    * appends them once per stage, batch or compaction, as soon as that
+    * unit is written, so a killed run leaves every finished unit's lineage.
+    */
+  def append(spark: SparkSession, metaDir: String, rows: Seq[MetaRow]): Unit =
+    if (rows.nonEmpty) spark.createDataFrame(rows).write.mode("append").parquet(metaDir)
+
+  /** Lineage rows of a stage that was just written to `catalog`:
     * `totalRows` is the count its write observed ([[Counted.write]]) —
     * re-reading a checkpointed stage just to count it would double the I/O
     * of every stage at corpus scale. It lands on the `_total` row; the one
     * row per part file carries the file's bytes (from the FS, free) and a
     * NULL row count, since the per-file split is not observed.
     */
-  def record(
+  def stageRows(
       spark: SparkSession,
       catalog: ParquetCatalog,
       runId: String,
       stage: String,
       fingerprint: String,
       wallMs: Long,
-      totalRows: Long): Unit = {
+      totalRows: Long): Seq[MetaRow] = {
     val p = new Path(catalog.location(stage))
     val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
       .filter(_.getPath.getName.endsWith(".parquet")).toSeq
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val rows = files.map { f =>
+    files.map { f =>
       MetaRow(runId, stage, f.getPath.getName, None, f.getLen, fingerprint, wallMs, now)
     } :+ MetaRow(runId, stage, "_total", Some(totalRows), files.map(_.getLen).sum,
       fingerprint, wallMs, now)
-    spark.createDataFrame(rows).write.mode("append").parquet(catalog.location(StageMetaDir))
   }
 
   private val MetaSchema = Encoders.product[MetaRow].schema

@@ -5,9 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.DedupPipeline
+import graft.{Chains, DedupPipeline}
 import graft.conf.DedupConfig
-import graft.io.Counted
+import graft.io.{Counted, StageMeta}
 import graft.io.ParquetCatalog.readParquet
 
 /** Incremental / streaming dedup (SURVEY.md §2.8).
@@ -115,76 +115,6 @@ object IncrementalDedup {
 
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Run independent Spark actions on concurrent threads and await all.
-    * The per-batch floor is FIXED job cost (scheduling + parquet commit),
-    * not task compute — overlapping independent write chains halves the
-    * wall without touching what is written. A failure in any task
-    * propagates before the caller reaches its commit marker, so the
-    * exactly-once replay contract is unchanged.
-    *
-    * Every task runs under one shared Spark job group, and a call made
-    * inside a chain (the lsh and suffix chains nest their own) joins the
-    * enclosing chain's group and deadline; a top-level call mints a fresh
-    * group, never adopting the caller's own. All chains share ONE deadline
-    * — default 120 min, `-Dgraft.chainTimeoutMin` / env
-    * `GRAFT_CHAIN_TIMEOUT_MIN`, fractional minutes allowed — so the worst
-    * case is one timeout, not one per chain or nesting level. When a chain
-    * fails or the deadline passes, the top-level call cancels the group, so
-    * no orphaned job (nested ones included) keeps writing
-    * `<table>/batch=<id>` partitions concurrently with a same-JVM replay of
-    * the failed batch, and interrupts the chain threads, so a chain stuck
-    * outside Spark is woken too. The error names the chain so a wedged FS
-    * call is debuggable instead of an unbounded silent hang. All tasks are
-    * awaited as Try BEFORE the first failure propagates.
-    */
-  private[graft] def inParallel[A](sc: org.apache.spark.SparkContext,
-      tasks: Seq[(String, () => A)]): Seq[A] = {
-    import java.util.concurrent.TimeUnit.NANOSECONDS
-    import scala.util.{Failure, Try}
-    val enclosing = Option(chainContext.get)
-    val (group, deadline) = enclosing.getOrElse {
-      val timeoutMin = sys.props.get("graft.chainTimeoutMin")
-        .orElse(sys.env.get("GRAFT_CHAIN_TIMEOUT_MIN"))
-        .flatMap(_.toDoubleOption).getOrElse(120.0)
-      (s"graft-incr-${java.util.UUID.randomUUID()}",
-        System.nanoTime() + (timeoutMin * 60e9).toLong)
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
-    try {
-      val futs = tasks.map { case (name, t) =>
-        name -> pool.submit(new java.util.concurrent.Callable[Try[A]] {
-          def call(): Try[A] = {
-            chainContext.set((group, deadline))
-            sc.setJobGroup(group, s"incr chain $name", interruptOnCancel = true)
-            try Try(t()) finally { sc.clearJobGroup(); chainContext.remove() }
-          }
-        })
-      }
-      val results = futs.map { case (name, f) =>
-        name -> (Try(f.get(math.max(0L, deadline - System.nanoTime()), NANOSECONDS)) match {
-          case Failure(_: java.util.concurrent.TimeoutException) =>
-            Failure(new RuntimeException(s"state chain '$name' still running at its deadline — wedged write?"))
-          case Failure(e) => Failure(e)
-          case scala.util.Success(inner) => inner
-        })
-      }
-      results.collectFirst { case (name, Failure(e)) =>
-        // the top-level call stops every still-running chain, nested ones
-        // included; a nested call leaves that to it (cancelling the shared
-        // group here would fail the enclosing chain's siblings under their
-        // own names, hiding the chain that failed)
-        if (enclosing.isEmpty) sc.cancelJobGroup(group)
-        throw new RuntimeException(s"state chain '$name' failed", e)
-      }
-      results.map(_._2.get)
-    } finally pool.shutdownNow()
-  }
-
-  /** (job group, deadline as System.nanoTime) of the chain running on this
-    * thread — set only on [[inParallel]]'s own chain threads.
-    */
-  private val chainContext = new ThreadLocal[(String, Long)]
 
   private def commit(spark: SparkSession, stateDir: String, id: Long): Unit = {
     val f = fs(spark, stateDir)
@@ -362,7 +292,7 @@ object IncrementalDedup {
       // run them concurrently so their fixed per-job costs overlap (the
       // measured 8–10 s/batch floor was ~17 SEQUENTIAL driver-coordinated
       // jobs).
-      val Seq(lsh, sfx, exact) = inParallel(spark.sparkContext, Seq[(String, () => ChainOut)](
+      val Seq(lsh, sfx, exact) = Chains.inParallel(spark.sparkContext, Seq[(String, () => ChainOut)](
         "lsh" -> (() => increment(Lsh, spark, stateDir, repsNew, done, id, cfg)),
         "suffix" -> (() => increment(Suffix, spark, stateDir, repsNew, done, id, cfg)),
         "exact" -> (() => exactIncrement(spark, stateDir, t1New, docsOld, nRaw, id))
@@ -479,7 +409,7 @@ object IncrementalDedup {
     // the key-row count rides the key write's observation (gram keys scale
     // with TOKENS, not docs, and a follow-up count job is a job the fixed
     // floor can't spare); it bounds the row count of every pruned key side
-    val Seq(nRows, nKeyRows) = inParallel(spark.sparkContext, Seq[(String, () => Long)](
+    val Seq(nRows, nKeyRows) = Chains.inParallel(spark.sparkContext, Seq[(String, () => Long)](
       rowsJob -> (() => Counted.write(rowsNew, partition(ix.rows))),
       keyRowsJob -> (() => Counted.write(keyRowsNew, partition(ix.keyRows)))))
     val keyRowsD = readParquet(spark, partition(ix.keyRows)).select(keyDocCols: _*)
@@ -487,7 +417,7 @@ object IncrementalDedup {
 
     // (rows written, verified pairs) of each job; the counts write has no
     // pairs
-    val Seq((nCounts, _), (nPairs, nVerified)) = inParallel(spark.sparkContext,
+    val Seq((nCounts, _), (nPairs, nVerified)) = Chains.inParallel(spark.sparkContext,
       Seq[(String, () => (Long, Long))](
       countsJob -> (() => (Counted.write(countsNew, partition(ix.counts)), 0L)),
       pairsJob -> (() => {
@@ -568,12 +498,11 @@ object IncrementalDedup {
     val f = fs(spark, stateDir)
     val now = new java.sql.Timestamp(System.currentTimeMillis())
     val lineage = StateTables.flatMap(t => rows.get(t).map { n =>
-      graft.io.StageMeta.MetaRow(runId, t, partition, Some(n),
+      StageMeta.MetaRow(runId, t, partition, Some(n),
         f.getContentSummary(new Path(s"$stateDir/$t/$partition")).getLength,
         fingerprint, wallMs, now)
     })
-    if (lineage.nonEmpty)
-      spark.createDataFrame(lineage).write.mode("append").parquet(s"$stateDir/stage_meta")
+    StageMeta.append(spark, s"$stateDir/${StageMeta.StageMetaDir}", lineage)
   }
 
   private val StateTables = "docs" +:
@@ -642,7 +571,7 @@ object IncrementalDedup {
     // (count tables re-aggregate to one row per key; every other table is
     // the plain union, minus the partition-discovery column)
     val countKeys = Indexes.map(ix => ix.counts -> ix.keys).toMap
-    val staged = inParallel(spark.sparkContext, StateTables.map { t => t -> { () =>
+    val staged = Chains.inParallel(spark.sparkContext, StateTables.map { t => t -> { () =>
       readState(spark, stateDir, t, ids).map { df =>
         Counted.write(countKeys.get(t).fold(df.drop("batch"))(sumCounts(df, _)), s"$tmpRoot/$t")
       }

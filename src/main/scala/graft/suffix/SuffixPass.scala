@@ -169,18 +169,13 @@ object SuffixPass {
     // tokens ≈ content bytes / 6, so one cheap content-byte aggregation
     // (scanning only the content column — the pass tokenizes that column
     // twice anyway) sizes each sort task at ~32 MB of gram rows. Floored at
-    // the session setting so small corpora keep their plans unchanged;
-    // `spark.graft.suffix.gramPartitions` overrides explicitly.
+    // the session setting so small corpora keep their plans unchanged.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val gramParts = spark.conf.getOption("spark.graft.suffix.gramPartitions")
-      .map(_.toInt)
-      .getOrElse {
-        val contentBytes = docs
-          .agg(coalesce(sum(octet_length(col("content"))), lit(0L))).head().getLong(0)
-        val density = if (cfg.suffixIndexMode == "winnow") 2.0 / (cfg.winnowW + 1) else 1.0
-        val gramBytesEst = (contentBytes / 6.0 * 16.0 * density).toLong
-        math.max(sessionParts, (gramBytesEst / (32L << 20) + 1).toInt)
-      }
+    val contentBytes = docs
+      .agg(coalesce(sum(octet_length(col("content"))), lit(0L))).head().getLong(0)
+    val density = if (cfg.suffixIndexMode == "winnow") 2.0 / (cfg.winnowW + 1) else 1.0
+    val gramBytesEst = (contentBytes / 6.0 * 16.0 * density).toLong
+    val gramParts = math.max(sessionParts, (gramBytesEst / (32L << 20) + 1).toInt)
 
     // Candidate pairs from shared rare fingerprints: one fp-hash shuffle +
     // in-partition sort, then a streaming group scan.

@@ -16,7 +16,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
 
   test("a throwing chain fails the batch and names the chain") {
     val e = intercept[RuntimeException] {
-      IncrementalDedup.inParallel[Long](spark.sparkContext, Seq(
+      Chains.inParallel[Long](spark.sparkContext, Seq(
         "fine" -> (() => 1L),
         "boom" -> (() => throw new IllegalStateException("kaput"))))
     }
@@ -27,7 +27,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
   test("all chains are awaited before the first failure propagates") {
     val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     intercept[RuntimeException] {
-      IncrementalDedup.inParallel[Long](spark.sparkContext, Seq(
+      Chains.inParallel[Long](spark.sparkContext, Seq(
         "fast-fail" -> (() => throw new IllegalStateException("first")),
         "slow-ok" -> (() => { Thread.sleep(1500); slowDone.set(true); 0L })))
     }
@@ -38,7 +38,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
     sys.props("graft.chainTimeoutMin") = "0"
     try {
       val e = intercept[RuntimeException] {
-        IncrementalDedup.inParallel[Long](spark.sparkContext, Seq(
+        Chains.inParallel[Long](spark.sparkContext, Seq(
           "wedged" -> (() => { Thread.sleep(8000); 0L })))
       }
       assert(e.getMessage.contains("wedged"), e.getMessage)
@@ -63,7 +63,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
 
   test("one deadline: three wedged chains fail within one timeout, not three") {
     val (e, secs) = underTimeout("0.05") { // 3 s
-      IncrementalDedup.inParallel[Long](spark.sparkContext,
+      Chains.inParallel[Long](spark.sparkContext,
         (1 to 3).map(i => s"wedged-$i" -> (() => { Thread.sleep(15000); 0L })))
     }
     assert(e.getMessage.contains("wedged-1"), e.getMessage)
@@ -73,7 +73,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
   test("a chain stuck outside Spark is interrupted once the call fails") {
     val interrupted = new java.util.concurrent.CountDownLatch(1)
     underTimeout("0.05") {
-      IncrementalDedup.inParallel[Long](spark.sparkContext, Seq("sleeper" -> (() => {
+      Chains.inParallel[Long](spark.sparkContext, Seq("sleeper" -> (() => {
         try Thread.sleep(15000)
         catch { case _: InterruptedException => interrupted.countDown() }
         0L
@@ -102,9 +102,9 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
     sc.addSparkListener(listener)
     try {
       underTimeout("0.05") {
-        IncrementalDedup.inParallel[Long](sc, Seq("nest-outer" -> (() => {
+        Chains.inParallel[Long](sc, Seq("nest-outer" -> (() => {
           sc.parallelize(1 to 4, 1).count()
-          IncrementalDedup.inParallel[Long](sc, Seq("nest-inner" -> (() =>
+          Chains.inParallel[Long](sc, Seq("nest-inner" -> (() =>
             sc.parallelize(1 to 1, 1).map { x => Thread.sleep(15000); x.toLong }.count()))).head
         })))
       }
@@ -130,7 +130,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
     sc.addSparkListener(listener)
     sc.setJobGroup("caller-span", "caller")
     try {
-      IncrementalDedup.inParallel[Long](sc, Seq("own" -> (() => sc.parallelize(1 to 4, 1).count())))
+      Chains.inParallel[Long](sc, Seq("own" -> (() => sc.parallelize(1 to 4, 1).count())))
       val until = System.nanoTime() + 5000000000L // listener events are async
       while (group.isEmpty && System.nanoTime() < until) Thread.sleep(20)
       assert(group.startsWith("graft-incr-"), group)
@@ -142,7 +142,7 @@ class InParallelSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("success path returns results in task order") {
-    val r = IncrementalDedup.inParallel[Int](spark.sparkContext, Seq(
+    val r = Chains.inParallel[Int](spark.sparkContext, Seq(
       "a" -> (() => 1), "b" -> (() => 2), "c" -> (() => 3)))
     assert(r == Seq(1, 2, 3))
   }

@@ -123,10 +123,49 @@ class StagedLazyParitySpec extends AnyFunSuite with SparkTestBase {
 
   test("a failing suffix pass surfaces its own exception under both executors") {
     // winnowK 60 > suffixMinLen 50 fails winnowKEff's require on the suffix
-    // pass (the lazy executor's own thread); the staged executor meets it
+    // pass (the lazy executor's suffix chain); the staged executor meets it
     // first in the config fingerprint
     val bad = DedupConfig(suffixIndexMode = "winnow", winnowK = 60)
     intercept[IllegalArgumentException](DedupPipeline.run(spark, t1, bad))
     intercept[IllegalArgumentException](staged(corpus, bad))
+  }
+
+  test("a failed lazy run cancels its suffix chain and leaves no cached plan behind") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftSqlTestBridge.cachedPlans
+    // fresh, uncached T1 frames: every plan the run caches is its own
+    def freshT1(): DataFrame = Ingest.ingest(spark.createDataFrame(corpus)
+      .select("repo", "path", "commit", "lang", "content")).repartition(4)
+
+    // a bad row fails the run where the fork materializes t1_distinct,
+    // before the suffix chain starts (the row reads a non-local relation,
+    // so it fails in a job, not in the optimizer)
+    val badRow = freshT1()
+      .withColumn("content", raise_error(concat(lit("boom: "), col("content"))).cast("string"))
+    val before = cachedPlans(spark)
+    intercept[Exception](DedupPipeline.run(spark, badRow, cfg))
+    assert(cachedPlans(spark) === before, "the run that failed on a bad row leaked cached plans")
+
+    // 252 bands overflow generateJoin's 8-bit band index inside the
+    // candidate_pairs build — after the suffix chain has started
+    val wide = DedupConfig(numPerms = 252, bands = 252, rowsPerBand = 1)
+    @volatile var thrownAt = Long.MaxValue
+    val late = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.time >= thrownAt)
+          late.add(s"job ${e.jobId} (${e.properties.getProperty("spark.job.description", "")})")
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      intercept[IllegalArgumentException](DedupPipeline.run(spark, freshT1(), wide))
+      thrownAt = System.currentTimeMillis()
+      assert(cachedPlans(spark) === before, "the run that failed after the fork leaked cached plans")
+      // time for a surviving suffix pass to submit its next jobs
+      Thread.sleep(3000)
+      org.apache.spark.GraftTestBridge.waitListenerBus(sc)
+      assert(late.isEmpty, s"jobs started after run() had thrown: $late")
+    } finally sc.removeSparkListener(listener)
   }
 }
